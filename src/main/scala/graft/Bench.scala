@@ -2,11 +2,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** CONTENTION.md's protocol, promoted into the harness: a pass that
-    * starts while the host 1-minute loadavg exceeds this JVM's core
-    * count ran on a contended machine — its wall time indicts the
-    * HOST, not the code.  The flag rides on every per-query record so
-    * a future round's regression triage self-diagnoses (the r9 356 s
-    * false alarm took a manual replay to disprove).
+    * starts while the host 1-minute loadavg exceeds the host's CPU
+    * count ([[hostCpus]]) ran on a contended machine — its wall time
+    * indicts the HOST, not the code.  The flag rides on every per-query
+    * record so a future round's regression triage self-diagnoses (the
+    * r9 356 s false alarm took a manual replay to disprove).
     */
   private[graft] def contended(loadavgs: Seq[Double], cores: Int): Boolean =
     loadavgs.exists(_ > cores.toDouble)
@@ -21,14 +21,53 @@ object Bench {
   private[graft] def stealContended(stealPcts: Seq[Double]): Boolean =
     stealPcts.exists(_ > 0.05)
 
+  private def procStat(): Seq[String] = {
+    val src = scala.io.Source.fromFile("/proc/stat")
+    try src.getLines().toVector finally src.close()
+  }
+
   /** Cumulative steal jiffies across all cpus (USER_HZ = 100), -1 on
     * read failure.
     */
   private[graft] def stealJiffies(): Long = scala.util.Try {
-    val line = scala.io.Source.fromFile("/proc/stat").getLines()
-      .find(_.startsWith("cpu ")).get
+    val line = procStat().find(_.startsWith("cpu ")).get
     line.trim.split("\\s+")(8).toLong // cpu user nice sys idle iowait irq softirq STEAL
   }.getOrElse(-1L)
+
+  /** The per-CPU `cpuN` lines of /proc/stat: the CPUs whose steal the
+    * aggregate `cpu` line sums, and whose run queues loadavg counts.
+    */
+  private[graft] def procStatCpus(lines: Seq[String]): Int =
+    lines.count(l => l.length > 3 && l.startsWith("cpu") && l.charAt(3).isDigit)
+
+  /** The host's CPU count from /proc/stat, else the JVM's view.
+    * `availableProcessors` is cgroup-aware, so in a CPU-limited
+    * container it undercounts the CPUs /proc/stat and loadavg see.
+    */
+  private[graft] def hostCpus(): Int =
+    scala.util.Try(procStatCpus(procStat())).toOption.filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Fraction of a pass's host CPU time stolen by the hypervisor, from
+    * the steal jiffies around it (USER_HZ = 100); -1 when either read
+    * failed or the pass took no time.
+    */
+  private[graft] def stealFraction(st0: Long, st1: Long, seconds: Double, cpus: Int): Double =
+    if (st0 < 0 || st1 < 0 || seconds <= 0) -1.0
+    else (st1 - st0) / (cpus * seconds * 100.0)
+
+  /** The longest prefix of `names` (slowest first) whose JSON string
+    * list fits in `window` characters.  It stops at the first name
+    * that does not fit, so a shown name is never slower-ranked than
+    * an omitted one.
+    */
+  private[graft] def namesThatFit(names: Seq[String], window: Int): List[String] = {
+    var len = 2 // the brackets
+    names.iterator.takeWhile { k =>
+      len += k.length + 3 // quotes and comma
+      len <= window
+    }.map("\"" + _ + "\"").toList
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -119,7 +158,7 @@ object Bench {
     // running, which no per-query statistic can repair (VERDICT r09).
     val acc = collection.mutable.Map.empty[String, Vector[(Double, Long, Double, Double)]]
       .withDefaultValue(Vector.empty)
-    val hostCores = Runtime.getRuntime.availableProcessors
+    val hostCores = hostCpus()
     for (_ <- 1 to runs; (name, fn) <- benchQueries) {
       val la = loadavg()
       val g0 = gcMs()
@@ -132,11 +171,7 @@ object Bench {
       }
       val dt = (System.nanoTime() - t0) / 1e9
       val st1 = stealJiffies()
-      // fraction of the pass's host CPU time stolen by the hypervisor
-      // (USER_HZ=100); -1 sentinel when /proc/stat is unreadable
-      val stealPct =
-        if (st0 < 0 || st1 < 0 || dt <= 0) -1.0
-        else (st1 - st0) / (hostCores * dt * 100.0)
+      val stealPct = stealFraction(st0, st1, dt, hostCores)
       graft.ops.DedupOps.unpersistAll()
       acc(name) = acc(name) :+ ((dt, gcMs() - g0, la, stealPct))
     }
@@ -155,7 +190,7 @@ object Bench {
     // with an explicit omitted-count; the durable file always carries
     // every query (medians + all runs + GC attribution).
     def isContended(ts: Vector[(Double, Long, Double, Double)]): Boolean =
-      contended(ts.map(_._3), cpus.toInt) || stealContended(ts.map(_._4))
+      contended(ts.map(_._3), hostCores) || stealContended(ts.map(_._4))
     val qsFull = results.map { case (k, ts) =>
       val all = ts.map(t => f"${t._1}%.4f").mkString("[", ",", "]")
       val gc = ts.map(_._2).mkString("[", ",", "]")
@@ -200,14 +235,7 @@ object Bench {
       .collect { case (k, ts) if isContended(ts) =>
         k -> median(ts.map(_._1)) }
       .sortBy(-_._2).map(_._1)
-    val contendedShown = {
-      val b = scala.collection.mutable.ListBuffer.empty[String]
-      var len = 2
-      contendedAll.foreach { k =>
-        if (len + k.length + 3 <= 400) { b += "\"" + k + "\""; len += k.length + 3 }
-      }
-      b.toList
-    }
+    val contendedShown = namesThatFit(contendedAll, 400)
     val contendedJson = contendedShown.mkString("[", ",", "]")
     val contendedOmitted = contendedAll.length - contendedShown.length
     def wrap(qs: String, omitted: Int) =

@@ -1048,11 +1048,12 @@ object TextOps {
     // (guide §2.4: remove jobs outright).  The kernel reproduces the
     // distributed loop exactly: same overlapping adjacent-pair counts,
     // same (n DESC, left ASC, right ASC) argmax in UTF8-binary order,
-    // same leftmost-first greedy merge fold (BpeKernelSpec pins
-    // equality against the distributed loop).  limit(threshold+1)
-    // bounds the collect — an over-budget vocabulary never reaches the
-    // driver and the loop below handles it distributed, so 100 TB
-    // corpora with enormous vocabularies keep the r18 shape.
+    // same leftmost-first greedy merge fold (OpsSpec's "BPE training:
+    // driver kernel equals the distributed merge loop" pins equality).
+    // limit(threshold+1) bounds the collect — an over-budget
+    // vocabulary never reaches the driver and the loop below handles
+    // it distributed, so 100 TB corpora with enormous vocabularies keep
+    // the r18 shape.
     val vocab = df.select(explode(tokens(col(textCol))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("wc"))
     if (collectThreshold > 0) {

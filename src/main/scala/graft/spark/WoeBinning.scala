@@ -368,9 +368,15 @@ object WoeBinning {
 
   /** Exact interpolated medians (pandas `Series.median`,
     * binning.py:297/302) for several columns in ONE distributed job:
-    * melt → per-value counts → Spark-side sort → driver interpolation
-    * over the grouped counts.  A column with no non-missing values maps
-    * to NaN.
+    * melt → per-value counts (one shuffle) → unsorted typed collect →
+    * driver sort and interpolation over the grouped counts.  A column
+    * with no non-missing values maps to NaN.
+    *
+    * The collect is O(distinct values).  `WoeBinningModel.transform`
+    * no longer calls this for every new batch: its per-bin imputation
+    * pass picks a value with the same label from O(variables × bins)
+    * collected extents, and falls back here only for the columns whose
+    * middle pair could overflow (see [[WoeBinningModel.imputationValues]]).
     */
   def exactMedians(df: DataFrame, cols: Seq[String]): Map[String, Double] = {
     val stackExpr = s"stack(${cols.length}, " +
@@ -420,8 +426,8 @@ object WoeBinning {
   *                   grouped stats (empty for loaded / hand-built models)
   * @param fitPlan    analyzed plan of the fit DataFrame; when the apply
   *                   DataFrame `sameResult`s it, `transform` reuses
-  *                   [[fitMedians]] instead of launching a second
-  *                   median job over the same data.  CONTRACT: plan
+  *                   [[fitMedians]] instead of running its imputation
+  *                   pass over the same data.  CONTRACT: plan
   *                   equality stands in for data equality — if the
   *                   underlying files are overwritten between fit and
   *                   transform, the reused medians describe the OLD
@@ -477,6 +483,14 @@ final class WoeBinningModel(
     * remove100Corr (binning.py:294-299); output holds ONLY the
     * `<col>_bin` columns unless passthrough is set.
     *
+    * Imputation cost: the median only decides which bin of the chain a
+    * missing cell lands in, so a new batch does not need it exactly.
+    * One narrow job with no shuffle collects per-bin (count, min, max)
+    * extents, O(variables × bins), and the driver picks a value in the
+    * median's bin ([[WoeBinningModel.imputationValues]]).  The output
+    * is bit-identical to imputing the exact median.  A batch whose plan
+    * is the fit plan reuses the fit's medians and runs no job.
+    *
     * The surviving-variable set is DATA-DEPENDENT (IV / bin-count /
     * dedup filters) — like the reference, the default output may have
     * fewer columns than fitted variables.  `exactSchema = true` keeps
@@ -490,6 +504,31 @@ final class WoeBinningModel(
       remove100Corr: Boolean = true,
       passthrough: Boolean = false,
       exactSchema: Boolean = false): DataFrame = {
+    val kept = keptVariables(ivThreshold, binThreshold, remove100Corr)
+    val selected = kept.collect { case (v, Some(bs)) => (v, bs) }
+    // the value a missing cell is imputed with, one per selected
+    // variable (binning.py:297,302).  When the apply plan IS the fit
+    // plan (the dominant fit-then-apply workflow), the fit already
+    // collected per-value counts: reuse its precomputed medians, zero
+    // jobs.  Otherwise one narrow per-bin pass over the apply data
+    // (imputationValues) picks a value that lands in the same bin as
+    // the apply data's exact median.
+    val imputed: Seq[Double] =
+      if (selected.isEmpty) Nil
+      else if (sameAsFit(df) && selected.forall(s => fitMedians.contains(s._1)))
+        selected.map { case (v, _) => fitMedians(v) }
+      else WoeBinningModel.imputationValues(df, selected)
+    renderTransform(df, kept, selected, imputed, passthrough, exactSchema)
+  }
+
+  /** `transform`'s variable filters (IV, bin count, IV-equality dedup;
+    * binning.py:278-299): every fitted variable with its bins when it
+    * survives, None when it is dropped.
+    */
+  private def keptVariables(
+      ivThreshold: Double,
+      binThreshold: Int,
+      remove100Corr: Boolean): Seq[(String, Option[Vector[WoeBin]])] = {
     // per-variable filters computed once: IV over complete rows,
     // bin-count incl. NaN row, +inf-only exclusion (binning.py:278-280)
     val withIv = fitted.map { case (v, bs) =>
@@ -500,53 +539,70 @@ final class WoeBinningModel(
     }
     // IV-equality dedup (binning.py:294-299), first occurrence wins
     var seenIvs = List.empty[Double]
-    val kept: Seq[(String, Option[Vector[WoeBin]])] =
-      withIv.map { case (v, bs, ivTotal, ok) =>
-        if (!ok) (v, None)
-        else if (remove100Corr && seenIvs.contains(ivTotal)) (v, None)
-        else {
-          seenIvs = ivTotal :: seenIvs
-          (v, Some(bs))
+    withIv.map { case (v, bs, ivTotal, ok) =>
+      if (!ok) (v, None)
+      else if (remove100Corr && seenIvs.contains(ivTotal)) (v, None)
+      else {
+        seenIvs = ivTotal :: seenIvs
+        (v, Some(bs))
+      }
+    }
+  }
+
+  /** The output `select`: each selected variable's chain over
+    * `coalesce(value, imputed)`, `imputed` aligned with `selected`.
+    */
+  private def renderTransform(
+      df: DataFrame,
+      kept: Seq[(String, Option[Vector[WoeBin]])],
+      selected: Seq[(String, Vector[WoeBin])],
+      imputed: Seq[Double],
+      passthrough: Boolean,
+      exactSchema: Boolean): DataFrame = {
+    val exprs = selected.zip(imputed).map { case ((v, bs), med) =>
+      applyExpr(v, bs, med).as(v + "_bin")
+    }
+    val outCols =
+      if (exactSchema) {
+        val it = exprs.iterator // kept's Some entries are `selected`, in order
+        kept.map {
+          case (_, Some(_)) => it.next()
+          case (v, None) => lit(null).cast(DoubleType).as(v + "_bin")
         }
       }
-    val selected = kept.collect { case (v, Some(bs)) => (v, bs) }
-    // medians of the APPLY dataset (binning.py:297,302).  When the apply
-    // plan IS the fit plan (the dominant fit-then-apply workflow), the
-    // fit already collected per-value counts — reuse its precomputed
-    // medians and skip the second scan entirely.  Otherwise: one job of
-    // exact interpolated medians for all selected columns at once, from
-    // per-value grouped counts (O(distinct) driver rows, like the fit's
-    // sufficient stats) — NOT Spark's `median`/`percentile` aggregate,
-    // whose final merge buffers every raw value of the group in one
-    // task: on a 100 TB apply pass that single buffer is the job
-    // killer, while grouped counts stay bounded by distinct values
-    val medians: Map[String, Double] =
-      if (selected.isEmpty) Map.empty
-      else if (sameAsFit(df) && selected.forall(s => fitMedians.contains(s._1)))
-        selected.iterator.map { case (v, _) => v -> fitMedians(v) }.toMap
-      else WoeBinning.exactMedians(df, selected.map(_._1))
-    val outCols =
-      if (exactSchema) kept.map {
-        case (v, Some(bs)) => applyExpr(v, bs, medians(v)).as(v + "_bin")
-        case (v, None) => lit(null).cast(DoubleType).as(v + "_bin")
-      }
-      else selected.map { case (variable, bs) =>
-        applyExpr(variable, bs, medians(variable)).as(variable + "_bin")
-      }
+      else exprs
     if (passthrough) df.select(col("*") +: outCols: _*)
     else df.select(outCols: _*)
   }
 
+  /** `transform` imputing the reference's own value, the exact median
+    * of `df` from one [[WoeBinning.exactMedians]] job, through the same
+    * chains: the oracle `ImputationSpec` checks the imputation pass
+    * against.
+    */
+  private[graft] def transformExactMedians(
+      df: DataFrame,
+      ivThreshold: Double = 0.02,
+      binThreshold: Int = 2,
+      remove100Corr: Boolean = true,
+      passthrough: Boolean = false,
+      exactSchema: Boolean = false): DataFrame = {
+    val kept = keptVariables(ivThreshold, binThreshold, remove100Corr)
+    val selected = kept.collect { case (v, Some(bs)) => (v, bs) }
+    val medians =
+      if (selected.isEmpty) Map.empty[String, Double]
+      else WoeBinning.exactMedians(df, selected.map(_._1))
+    renderTransform(df, kept, selected, selected.map(s => medians(s._1)),
+      passthrough, exactSchema)
+  }
+
   /** pd.cut-equivalent expression for one variable (binning.py:283-303). */
   private def applyExpr(variable: String, bs: Vector[WoeBin], med: Double): Column = {
-    val complete = bs.filter(isCompleteRow)
-    var cuts = complete.map(_.intervalStartInclude) :+ complete.last.intervalEndExclude
-    var labels = complete.map(_.woe)
-    val rightClosed = cuts.head > cuts.last
-    if (rightClosed) { cuts = cuts.reverse; labels = labels.reverse }
+    val WoeChain(cuts, labels, rightClosed) = WoeChain(bs)
     // NaN → null → median; then bucket via the interval chain
     val raw = col(variable).cast(DoubleType)
     val base = coalesce(when(isnan(raw), lit(null)).otherwise(raw), lit(med))
+    // the same comparisons, in the same order, as WoeChain.leaf
     val chain = labels.indices.dropRight(1).foldLeft(Option.empty[Column]) {
       case (acc, k) =>
         val cond =
@@ -593,5 +649,152 @@ object WoeBinningModel {
       bins.head.variable -> bins
     }
     new WoeBinningModel(fitted)
+  }
+
+  /** Per-variable per-leaf extents of the non-missing values: the
+    * count, min and max of the values each chain leaf holds.  Leaves
+    * are laid out variable after variable (`offsets`).  Mutable so a
+    * partition's pass and the driver merge allocate once.
+    */
+  private final class LeafExtents(width: Int) extends Serializable {
+    val count = new Array[Long](width)
+    val min: Array[Double] = Array.fill(width)(Double.PositiveInfinity)
+    val max: Array[Double] = Array.fill(width)(Double.NegativeInfinity)
+
+    def add(i: Int, v: Double): Unit = {
+      count(i) += 1
+      if (v < min(i)) min(i) = v
+      if (v > max(i)) max(i) = v
+    }
+
+    def merge(o: LeafExtents): LeafExtents = {
+      var i = 0
+      while (i < width) {
+        count(i) += o.count(i)
+        if (o.min(i) < min(i)) min(i) = o.min(i)
+        if (o.max(i) > max(i)) max(i) = o.max(i)
+        i += 1
+      }
+      this
+    }
+  }
+
+  /** The value each selected variable's missing cells are imputed
+    * with, aligned with `selected`: one that its chain puts in the same
+    * leaf as the exact median of `df`'s non-missing values, so the
+    * output equals imputing the exact median (binning.py:297,302) bit
+    * for bit.
+    *
+    * ONE job with no shuffle reads the selected columns cast to double
+    * and sends each non-missing value to its leaf by [[WoeChain.leaf]],
+    * the comparisons of the chain itself.  Each task returns its
+    * per-leaf (count, min, max), merged on the driver as tasks end: the
+    * collect is O(partitions × variables × bins), whatever the number
+    * of distinct values.  Every leaf's preimage is an interval (an
+    * intersection of half-lines), so the occupied leaves ordered by
+    * their min split the sorted values into consecutive runs, and the
+    * driver can place ranks n/2−1 and n/2 (n non-missing values):
+    *
+    *  - n = 0: NaN, as the exact median;
+    *  - n odd: the min of the leaf holding rank n/2, a data value in
+    *    the median's leaf;
+    *  - n even, ranks in leaves i then k: `(max_i + min_k) / 2.0`, the
+    *    exact median's formula on its exact operands;
+    *  - n even, both ranks in leaf i: min_i, because the exact median
+    *    `fl((lo + hi) / 2)` lies in `[lo, hi]` inside the leaf's
+    *    interval — unless the sum can overflow (|min_i| or |max_i| above
+    *    `Double.MaxValue / 2`).  Only such columns take a second,
+    *    exact [[WoeBinning.exactMedians]] job.
+    */
+  private[spark] def imputationValues(
+      df: DataFrame,
+      selected: Seq[(String, Vector[WoeBin])]): Seq[Double] = {
+    val chains = selected.map { case (_, bs) => WoeChain(bs) }.toArray
+    val offsets = chains.scanLeft(0)(_ + _.labels.length)
+    val width = offsets.last
+    val rows = df.select(selected.map { case (v, _) => col(v).cast(DoubleType) }: _*)
+      .queryExecution.toRdd
+    val ext = rows.mapPartitions { it =>
+      val e = new LeafExtents(width)
+      while (it.hasNext) {
+        val row = it.next()
+        var j = 0
+        while (j < chains.length) {
+          if (!row.isNullAt(j)) {
+            val v = row.getDouble(j)
+            if (!v.isNaN) e.add(offsets(j) + chains(j).leaf(v), v)
+          }
+          j += 1
+        }
+      }
+      Iterator.single(e)
+    }.fold(new LeafExtents(width))(_ merge _)
+    val picked = chains.indices.map(j => pickImputation(ext, offsets(j), offsets(j + 1)))
+    val overflow = selected.indices.filter(picked(_).isEmpty).map(selected(_)._1).distinct
+    val exact =
+      if (overflow.isEmpty) Map.empty[String, Double]
+      else WoeBinning.exactMedians(df, overflow)
+    selected.indices.map(j => picked(j).getOrElse(exact(selected(j)._1)))
+  }
+
+  /** One variable's imputation value from its leaves `[from, until)` of
+    * `ext` (see [[imputationValues]]); None when only the exact median
+    * is safe.
+    */
+  private def pickImputation(ext: LeafExtents, from: Int, until: Int): Option[Double] = {
+    val occupied = (from until until).filter(ext.count(_) > 0)
+      .sortWith((a, b) => ext.min(a) < ext.min(b))
+    val n = occupied.iterator.map(ext.count(_)).sum
+    // the leaf holding 0-based rank r
+    def leafOf(r: Long): Int = {
+      var seen = 0L
+      occupied.find { i => seen += ext.count(i); r < seen }.get
+    }
+    def huge(x: Double) = math.abs(x) > Double.MaxValue / 2
+    if (n == 0) Some(Double.NaN)
+    else if (n % 2 == 1) Some(ext.min(leafOf(n / 2)))
+    else {
+      val (i, k) = (leafOf(n / 2 - 1), leafOf(n / 2))
+      if (i != k) Some((ext.max(i) + ext.min(k)) / 2.0)
+      else if (huge(ext.min(i)) || huge(ext.max(i))) None
+      else Some(ext.min(i))
+    }
+  }
+}
+
+/** One variable's `when`-chain layout, shared by `transform`'s
+  * expression and its imputation pass so the two cannot drift: the
+  * cuts and labels of the complete bins, reversed when the bins
+  * descend, with `<=` comparisons for descending (right-closed) chains
+  * and `<` for ascending (left-closed) ones.
+  */
+private[spark] final case class WoeChain(
+    cuts: Array[Double],
+    labels: Array[Double],
+    rightClosed: Boolean) {
+
+  /** The leaf the chain sends non-missing `v` to: the first condition
+    * `v < cuts(k + 1)` (or `<=`) that holds, else the last label.
+    * Plain JVM comparisons agree with Spark's double ordering on
+    * non-NaN values, −0.0 == 0.0 included.
+    */
+  def leaf(v: Double): Int = {
+    val last = labels.length - 1
+    var k = 0
+    while (k < last) {
+      if (if (rightClosed) v <= cuts(k + 1) else v < cuts(k + 1)) return k
+      k += 1
+    }
+    last
+  }
+}
+
+private[spark] object WoeChain {
+  def apply(bs: Vector[WoeBin]): WoeChain = {
+    val complete = bs.filter(Kernels.isCompleteRow)
+    val cuts = (complete.map(_.intervalStartInclude) :+ complete.last.intervalEndExclude).toArray
+    val labels = complete.map(_.woe).toArray
+    if (cuts.head > cuts.last) WoeChain(cuts.reverse, labels.reverse, rightClosed = true)
+    else WoeChain(cuts, labels, rightClosed = false)
   }
 }

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the bench harness's contention self-diagnosis (CONTENTION.md
   * protocol, promoted into BENCH_out.json in r11): a per-query record
   * is flagged `contended` iff ANY of its passes started while the
-  * 1-minute loadavg exceeded this JVM's core count.
+  * 1-minute loadavg exceeded the host's CPU count, or lost more than 5%
+  * of the host's CPU time to hypervisor steal.
   */
 class BenchSpec extends AnyFunSuite {
 
@@ -36,6 +37,48 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.stealContended(Nil))
     // the /proc/stat parse never throws (−1 on failure)
     assert(Bench.stealJiffies() >= -1L)
+  }
+
+  test("procStatCpus counts the per-CPU lines, not the aggregate") {
+    val stat = Seq(
+      "cpu  4705 356 584 3699 23 23 0 18 0 0",
+      "cpu0 1393 280 157 868 7 11 0 6 0 0",
+      "cpu1 1201 25 151 950 6 4 0 4 0 0",
+      "cpu12 1054 26 141 932 5 4 0 4 0 0",
+      "intr 114930548 113199788 3 0 5 263 0 4 [... lots more numbers ...]",
+      "ctxt 1990473",
+      "cpufreq 0")
+    assert(Bench.procStatCpus(stat) == 3)
+    assert(Bench.procStatCpus(Nil) == 0)
+    assert(Bench.hostCpus() >= 1)
+  }
+
+  test("stealFraction divides the steal jiffies by host CPU time") {
+    // 8 CPUs for 2 s is 1600 jiffies of CPU time; 80 stolen is 5%
+    assert(Bench.stealFraction(1000L, 1080L, 2.0, 8) == 0.05)
+    // the same steal spread over a 4-CPU view reads twice as large:
+    // the denominator must be the CPUs the aggregate line sums
+    assert(Bench.stealFraction(1000L, 1080L, 2.0, 4) == 0.1)
+    assert(Bench.stealFraction(-1L, 1080L, 2.0, 8) == -1.0)
+    assert(Bench.stealFraction(1000L, -1L, 2.0, 8) == -1.0)
+    assert(Bench.stealFraction(1000L, 1080L, 0.0, 8) == -1.0)
+  }
+
+  test("namesThatFit keeps the slowest-first prefix that fits the window") {
+    // ["aaaa","bb"] counts 2 + (4+3) + (2+3) = 14 characters (the
+    // count keeps a comma of slack, as the line budget always has)
+    assert(Bench.namesThatFit(Seq("aaaa", "bb"), 14) == List("\"aaaa\"", "\"bb\""))
+    assert(Bench.namesThatFit(Seq("aaaa", "bb"), 13) == List("\"aaaa\""))
+    // a name that does not fit ends the list: the shorter, faster
+    // names after it are omitted too, never shown in its place
+    assert(Bench.namesThatFit(Seq("aaaa", "b" * 20, "c"), 14) == List("\"aaaa\""))
+    assert(Bench.namesThatFit(Seq("b" * 20, "c"), 14) == Nil)
+    assert(Bench.namesThatFit(Nil, 400) == Nil)
+    // the shown list, as JSON, never exceeds the window
+    val names = (1 to 100).map(i => "q_" + "x" * (i % 17))
+    val shown = Bench.namesThatFit(names, 400)
+    assert(shown.mkString("[", ",", "]").length <= 400)
+    assert(shown.map(_.stripPrefix("\"").stripSuffix("\"")) == names.take(shown.length))
   }
 
   test("pageRankLongKernel: 1 M edges (the collectThreshold) stays in kernel range") {

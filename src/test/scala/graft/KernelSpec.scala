@@ -71,6 +71,23 @@ class KernelSpec extends AnyFunSuite {
     assert(out.length == 3, "clearly-separated bins must not merge")
   }
 
+  test("significanceMerge: an exact p-value tie absorbs twice but drops once (binning.py:219-224)") {
+    // four groups, equal sizes and stds, means a dyadic 0.25 apart: the
+    // three adjacent pairs have bit-identical z, hence tied p ≈ 0.144
+    // above pThreshold.  The first max (pair 0-1) drops row 1, but every
+    // tied row takes its pair's merged stats, so row 2 absorbs row 3
+    // while row 3 stays: 40 rows in, 50 counted after the first pass.
+    // The next passes merge the two low rows (p ≈ 0.27), then stop.
+    val in = Vector(gs(1, 10, 0.875, 0.5), gs(2, 10, 0.625, 0.5),
+      gs(3, 10, 0.375, 0.5), gs(4, 10, 0.125, 0.5))
+    val out = Kernels.significanceMerge(in, nThreshold = 0, nOccurrences = 0, pThreshold = 0.1)
+    assert(out.map(_.value) == Vector(1.0, 3.0))
+    assert(out.map(_.size) == Vector(20.0, 30.0))
+    assert(out(0).mean == 0.75)
+    assert(math.abs(out(1).mean - 6.25 / 30) < 1e-15)
+    assert(out.map(_.size).sum > in.map(_.size).sum)
+  }
+
   test("assembleIntervals: outer edges and lead semantics (binning.py:226-231)") {
     val rows = Vector(gs(10, 5, 0.8), gs(20, 5, 0.5), gs(30, 5, 0.2))
     val asc = Kernels.assembleIntervals("v", rows, Double.PositiveInfinity)

@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Shuffle-budget assertions: SCALE.md claims several plans shuffle
@@ -27,11 +28,40 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       f
-      // listener events are async: give the bus a moment to drain
-      // (the private listenerBus.waitUntilEmpty is unreachable here)
-      Thread.sleep(1500)
+      // listener events are async: wait until the bus delivered them
+      TestListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     acc.get()
+  }
+
+  /** What `f` ran: jobs, shuffle-write bytes, and the serialized task
+    * result bytes the driver collected.
+    */
+  private final case class JobCost(jobs: Int, shuffleBytes: Long, resultBytes: Long)
+
+  private def jobCost(f: => Unit): JobCost = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shuffle = new java.util.concurrent.atomic.AtomicLong(0L)
+    val result = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+        val m = te.taskMetrics
+        if (m != null) {
+          shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          result.addAndGet(m.resultSize)
+        }
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    TestListenerBus.drain(sc) // no earlier test's events leak in
+    sc.addSparkListener(listener)
+    try { f; TestListenerBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    JobCost(jobs.get(), shuffle.get(), result.get())
   }
 
   /** (total shuffle-read bytes, max single-task shuffle-read bytes)
@@ -54,7 +84,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    try { f; Thread.sleep(1500) }
+    try { f; TestListenerBus.drain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(listener)
     (total.get(), maxTask.get())
   }
@@ -131,6 +161,45 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     // count()'s own final aggregation exchanges one tiny row per
     // partition; the TRANSFORM itself must add nothing beyond that
     assert(bytes < 50000, s"apply shuffled $bytes bytes")
+  }
+
+  test("transform of a new batch: one narrow imputation job, collect bounded by bins") {
+    // a near-unique apply column: the exact-medians job it replaced
+    // shuffled and collected one row per distinct value; the imputation
+    // pass collects per-bin (count, min, max) per task, whatever the
+    // number of distinct values
+    val fitDf = spark.range(0, 20000, 1, 4).select(
+      (col("id") * 0.731).as("x"), (col("id") % 7).cast("double").as("y"),
+      when(rand(7) < col("id") / 20000.0, 1.0).otherwise(0.0).as("target"))
+    val model = graft.spark.WoeBinning.fit(fitDf, "target", Seq("x", "y"),
+      graft.spark.WoeFitOptions(nThreshold = Some(300)))
+    val bins = Seq("x", "y").map(model.bins(_).length).sum
+    def batch(n: Long) = spark.range(0, n, 1, 4).select(
+      when(col("id") % 11 === 0, lit(null)).otherwise(col("id") * 0.377).as("x"),
+      (col("id") % 5).cast("double").as("y"))
+    // 4 tasks, each returning 3 arrays of `bins` slots plus a fixed
+    // serialization overhead (about 1.4 kB); independent of the
+    // distinct count
+    val bound = 4L * (24L * bins + 4096L)
+    for (n <- Seq(20000L, 400000L)) {
+      val df = batch(n)
+      val cost = jobCost { model.transform(df); () }
+      assert(cost.jobs == 1, s"$n rows: ${cost.jobs} jobs before the output action")
+      assert(cost.shuffleBytes == 0L, s"$n rows: imputation shuffled ${cost.shuffleBytes} bytes")
+      assert(cost.resultBytes > 0L && cost.resultBytes < bound,
+        s"$n rows: collected ${cost.resultBytes} bytes, bound $bound ($bins bins)")
+      info(s"$n rows: ${cost.resultBytes} task-result bytes, bound $bound ($bins bins)")
+    }
+    // the bound bites: the exact medians collect grows with distinct values
+    val exact = jobCost {
+      graft.spark.WoeBinning.exactMedians(batch(400000L), Seq("x", "y")); ()
+    }
+    assert(exact.resultBytes > 10 * bound, s"exact medians collected ${exact.resultBytes}")
+    info(s"exact medians at 400000 rows: ${exact.resultBytes} task-result bytes")
+    // a middle pair that can overflow takes the exact job as well
+    val huge = spark.range(0, 6, 1, 2).select(
+      (lit(Double.MaxValue) - col("id")).as("x"), lit(1.0).as("y"))
+    assert(jobCost { model.transform(huge); () }.jobs > 1)
   }
 
   test("blocklist match scans without shuffling text") {
