@@ -184,19 +184,7 @@ object PipelineDemo {
         "input" -> docs, "quality_gate" -> quality, "dedup_purge" -> deduped,
         "window_dedup" -> substringClean, "decontaminate" -> clean,
         "rebalance" -> balanced, "packed" -> out)
-      val stages = timed("stage_counts") {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          stageFrames.size)
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks = stageFrames.map { case (name, df) =>
-            new java.util.concurrent.Callable[(String, Long)] {
-              def call(): (String, Long) = name -> df.count()
-            }
-          }
-          pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
-        } finally pool.shutdown()
-      }
+      val stages = timed("stage_counts")(countConcurrently(stageFrames))
       lastStageSeconds = secs.result()
       (out, seqPlan, stages)
     } finally {
@@ -206,6 +194,27 @@ object PipelineDemo {
       DedupOps.unpersistAll()
       ClusterOps.unpersistAll()
     }
+  }
+
+  /** Each frame's `count()`, all submitted at once from a driver pool
+    * of one thread per frame, in input order.  A failed count rethrows
+    * its own exception, not the pool's `ExecutionException` wrapper.
+    */
+  private[graft] def countConcurrently(
+      frames: Seq[(String, DataFrame)]): Seq[(String, Long)] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(frames.size)
+    try {
+      import scala.jdk.CollectionConverters._
+      val tasks = frames.map { case (name, df) =>
+        new java.util.concurrent.Callable[(String, Long)] {
+          def call(): (String, Long) = name -> df.count()
+        }
+      }
+      pool.invokeAll(tasks.asJava).asScala.map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }.toSeq
+    } finally pool.shutdown()
   }
 
   def main(args: Array[String]): Unit = {

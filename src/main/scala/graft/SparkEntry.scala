@@ -2704,7 +2704,7 @@ object SparkEntry {
   }
 
   /** apply_bins as a DuckDB CASE compiled from the SAME golden fixture
-    * the fit oracle uses, mirroring `WoeBinning.applyExpr`'s cut/label
+    * the fit oracle uses, mirroring `graft.functions.WoeChain`'s cut/label
     * reconstruction step-for-step (complete rows only, orientation
     * reverse, right-closed `<=` vs left-closed `<`).  The cut values
     * are data values (no arithmetic), so boundary bucketing is exact

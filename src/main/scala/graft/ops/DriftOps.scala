@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   */
 object DriftOps {
 
-  /** Fixed-edge bin id — the same when-chain shape the WoE transform
-    * compiles to, codegen'd, no join.  `rightClosed = true` gives
+  /** Fixed-edge bin id — a codegen'd when-chain over the edges, no
+    * join, with the comparisons of the WoE transform's
+    * `graft.functions.WoeChain`.  `rightClosed = true` gives
     * `(-inf, e₀], (e₀, e₁], …`; false gives the left-closed
     * `(-inf, e₀), [e₀, e₁), …` — the transform picks the comparator
     * from the fit orientation, and drift bins must match it or
@@ -96,8 +97,10 @@ object DriftOps {
     * population" call.  Null/NaN rows surface as the `-1` missing bin
     * (the drift mirror of the model's NaN bin), and the interval
     * comparator follows the model's fit orientation exactly as the
-    * transform's when-chain does, so boundary-exact values are
-    * counted in the same bin scoring puts them.
+    * transform's `graft.functions.WoeChain` does, so boundary-exact
+    * values are counted in the same bin scoring puts them.  An unknown
+    * `variable` fails with an `IllegalArgumentException` naming the
+    * fitted ones.
     */
   def psiForModel(
       model: graft.spark.WoeBinningModel,
@@ -105,7 +108,7 @@ object DriftOps {
       epsilon: Double = 1e-6): DataFrame = {
     val complete = model.bins(variable)
       .filter(graft.core.Kernels.isCompleteRow)
-    // same orientation rule as WoeBinningModel.applyExpr: descending
+    // same orientation rule as graft.functions.WoeChain: descending
     // recorded intervals = right-closed cuts
     val rightClosed = complete.length < 2 ||
       complete.head.intervalStartInclude > complete.last.intervalStartInclude

@@ -217,4 +217,16 @@ class ApiSpec extends AnyFunSuite {
     assert(out.columns.toSeq ==
       Seq("target", "extendedprice", "quantity", "discount", "extendedprice_bin"))
   }
+
+  test("bins of an unknown variable names it and the fitted ones, also through psiForModel") {
+    val bs = (v: String) => Vector(graft.core.WoeBin(v, Double.NegativeInfinity,
+      Double.PositiveInfinity, 10, 0.5, 5, 5, 0.1, 0.1, 0.0, 0.0))
+    val model = new graft.spark.WoeBinningModel(Seq("a" -> bs("a"), "b" -> bs("b")))
+    val e = intercept[IllegalArgumentException](model.bins("zz"))
+    assert(e.getMessage == "no fitted variable 'zz'; the model fitted [a, b]")
+    val df = spark.range(3).select(col("id").cast("double").as("zz"))
+    val e2 = intercept[IllegalArgumentException](
+      graft.ops.DriftOps.psiForModel(model, df, df, "zz"))
+    assert(e2.getMessage == e.getMessage)
+  }
 }

@@ -26,81 +26,6 @@ class ImputationSpec extends AnyFunSuite {
   import ImputationSpec._
   private lazy val spark = TestSpark.spark
 
-  private val Huge = Seq(Double.MaxValue, -Double.MaxValue, Double.MaxValue * 0.75,
-    -Double.MaxValue * 0.75, Math.nextUp(Double.MaxValue / 2), Double.MaxValue / 4)
-  private val Special = Seq(0.0, -0.0, Double.PositiveInfinity,
-    Double.NegativeInfinity, Double.MinPositiveValue)
-
-  private val genCut: Gen[Double] = Gen.frequency(
-    6 -> Gen.choose(-50, 50).map(_.toDouble),
-    3 -> Gen.choose(-50.0, 50.0),
-    1 -> Gen.oneOf(0.0, -0.0, Double.MaxValue / 4, -Double.MaxValue / 4))
-
-  private def bin(v: String, lo: Double, hi: Double, woe: Double, iv: Double) =
-    WoeBin(v, lo, hi, 10, 0.5, 5, 5, 0.1, 0.1, woe, iv)
-
-  /** Hand-built bins of one variable: k complete bins of `shape`,
-    * sometimes with a trailing NaN row, labels possibly repeated.
-    */
-  private def genBins(v: String, shape: Shape): Gen[Vector[WoeBin]] = for {
-    k <- Gen.choose(1, 5)
-    raw <- Gen.listOfN(k - 1, genCut)
-    woes <- Gen.listOfN(k, Gen.oneOf(Gen.choose(-3.0, 3.0), Gen.const(0.5)))
-    iv <- Gen.choose(0.05, 2.0)
-    nanRow <- Gen.oneOf(true, false)
-    keys <- Gen.listOfN(k - 1, Gen.choose(0.0, 1.0))
-  } yield {
-    val inner = raw.distinct.sorted.toVector
-    val cuts: Vector[Double] = shape match {
-      case Ascending => Double.NegativeInfinity +: inner :+ Double.PositiveInfinity
-      case Descending => Double.PositiveInfinity +: inner.reverse :+ Double.NegativeInfinity
-      case Unordered if inner.nonEmpty =>
-        val mixed = inner.zip(keys).sortBy(_._2).map(_._1)
-        mixed.head +: mixed :+ mixed.last
-      case Unordered => Vector(Double.NegativeInfinity, Double.PositiveInfinity)
-    }
-    val n = cuts.length - 1
-    val complete = (0 until n).map { i =>
-      bin(v, cuts(i), cuts(i + 1), woes(i % woes.length), iv / n)
-    }.toVector
-    if (nanRow) complete :+ bin(v, Double.NaN, Double.NaN, 1.25, Double.NaN)
-    else complete
-  }
-
-  /** The finite cut points of `bs` and their neighbouring doubles. */
-  private def edgeValues(bs: Vector[WoeBin]): Seq[Double] =
-    bs.flatMap(b => Seq(b.intervalStartInclude, b.intervalEndExclude))
-      .filter(x => !x.isNaN && !x.isInfinite)
-      .flatMap(c => Seq(c, Math.nextUp(c), Math.nextDown(c)))
-
-  /** One column: a small pool of values (so middle ranks often fall
-    * in different, non-adjacent bins), drawn with a missing rate.
-    */
-  private def genColumn(rows: Int, bs: Vector[WoeBin]): Gen[Vector[Option[Double]]] = {
-    val cands = edgeValues(bs) ++ Special ++ Huge
-    for {
-      poolSize <- Gen.choose(1, 6)
-      pool <- Gen.listOfN(poolSize,
-        Gen.frequency(5 -> Gen.oneOf(cands), 3 -> Gen.choose(-60.0, 60.0)))
-      missingRate <- Gen.oneOf(0.0, 0.0, 0.2, 0.5, 1.0)
-      cells <- Gen.listOfN(rows, for {
-        u <- Gen.choose(0.0, 1.0)
-        nan <- Gen.oneOf(true, false)
-        x <- Gen.oneOf(pool)
-      } yield if (u < missingRate) (if (nan) Some(Double.NaN) else None) else Some(x))
-    } yield cells.toVector
-  }
-
-  private def frame(names: Seq[String], cols: Seq[Vector[Option[Double]]],
-      partitions: Int): DataFrame = {
-    val rows = cols.head.indices.map(r => Row(cols.map(_(r).getOrElse(null)): _*))
-    val schema = StructType(names.map(StructField(_, DoubleType, nullable = true)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, partitions), schema)
-  }
-
-  private val genRows: Gen[Int] =
-    Gen.frequency(3 -> Gen.choose(1, 4), 4 -> Gen.choose(5, 60), 2 -> Gen.choose(61, 400))
-
   private val genOptions: Gen[(Int, Boolean, Boolean, Int)] = for {
     partitions <- Gen.choose(1, 8)
     exactSchema <- Gen.oneOf(true, false)
@@ -149,18 +74,6 @@ class ImputationSpec extends AnyFunSuite {
     val cols = Seq(genColumn(rows, model.bins("x")).pureApply(Gen.Parameters.default, Seed(seed)))
     Trial(model, frame(Seq("x"), cols, partitions), Nil, sentinel = true,
       cols, partitions, exactSchema, remove100Corr, binThreshold)
-  }
-
-  private def sameCells(got: Array[Row], want: Array[Row]): Option[String] = {
-    if (got.length != want.length) return Some(s"${got.length} rows vs ${want.length}")
-    got.indices.iterator.flatMap { r =>
-      (0 until want(r).length).iterator.collect {
-        case c if got(r).isNullAt(c) != want(r).isNullAt(c) ||
-            (!want(r).isNullAt(c) && java.lang.Double.doubleToLongBits(got(r).getDouble(c)) !=
-              java.lang.Double.doubleToLongBits(want(r).getDouble(c))) =>
-          s"row $r col $c: ${got(r).get(c)} vs exact-median ${want(r).get(c)}"
-      }
-    }.nextOption()
   }
 
   private def check(trial: Trial, seed: Long, cov: Coverage): Coverage = {
@@ -230,6 +143,95 @@ class ImputationSpec extends AnyFunSuite {
 }
 
 object ImputationSpec {
+  /** Generators and helpers shared with `WoeLookupSpec`. */
+  val Huge = Seq(Double.MaxValue, -Double.MaxValue, Double.MaxValue * 0.75,
+    -Double.MaxValue * 0.75, Math.nextUp(Double.MaxValue / 2), Double.MaxValue / 4)
+  val Special = Seq(0.0, -0.0, Double.PositiveInfinity,
+    Double.NegativeInfinity, Double.MinPositiveValue)
+
+  val genCut: Gen[Double] = Gen.frequency(
+    6 -> Gen.choose(-50, 50).map(_.toDouble),
+    3 -> Gen.choose(-50.0, 50.0),
+    1 -> Gen.oneOf(0.0, -0.0, Double.MaxValue / 4, -Double.MaxValue / 4))
+
+  def bin(v: String, lo: Double, hi: Double, woe: Double, iv: Double) =
+    WoeBin(v, lo, hi, 10, 0.5, 5, 5, 0.1, 0.1, woe, iv)
+
+  /** Hand-built bins of one variable: k complete bins of `shape`,
+    * sometimes with a trailing NaN row, labels possibly repeated.
+    */
+  def genBins(v: String, shape: Shape): Gen[Vector[WoeBin]] = for {
+    k <- Gen.choose(1, 5)
+    raw <- Gen.listOfN(k - 1, genCut)
+    woes <- Gen.listOfN(k, Gen.oneOf(Gen.choose(-3.0, 3.0), Gen.const(0.5)))
+    iv <- Gen.choose(0.05, 2.0)
+    nanRow <- Gen.oneOf(true, false)
+    keys <- Gen.listOfN(k - 1, Gen.choose(0.0, 1.0))
+  } yield {
+    val inner = raw.distinct.sorted.toVector
+    val cuts: Vector[Double] = shape match {
+      case Ascending => Double.NegativeInfinity +: inner :+ Double.PositiveInfinity
+      case Descending => Double.PositiveInfinity +: inner.reverse :+ Double.NegativeInfinity
+      case Unordered if inner.nonEmpty =>
+        val mixed = inner.zip(keys).sortBy(_._2).map(_._1)
+        mixed.head +: mixed :+ mixed.last
+      case Unordered => Vector(Double.NegativeInfinity, Double.PositiveInfinity)
+    }
+    val n = cuts.length - 1
+    val complete = (0 until n).map { i =>
+      bin(v, cuts(i), cuts(i + 1), woes(i % woes.length), iv / n)
+    }.toVector
+    if (nanRow) complete :+ bin(v, Double.NaN, Double.NaN, 1.25, Double.NaN)
+    else complete
+  }
+
+  /** The finite cut points of `bs` and their neighbouring doubles. */
+  def edgeValues(bs: Vector[WoeBin]): Seq[Double] =
+    bs.flatMap(b => Seq(b.intervalStartInclude, b.intervalEndExclude))
+      .filter(x => !x.isNaN && !x.isInfinite)
+      .flatMap(c => Seq(c, Math.nextUp(c), Math.nextDown(c)))
+
+  /** One column: a small pool of values (so middle ranks often fall
+    * in different, non-adjacent bins), drawn with a missing rate.
+    */
+  def genColumn(rows: Int, bs: Vector[WoeBin]): Gen[Vector[Option[Double]]] = {
+    val cands = edgeValues(bs) ++ Special ++ Huge
+    for {
+      poolSize <- Gen.choose(1, 6)
+      pool <- Gen.listOfN(poolSize,
+        Gen.frequency(5 -> Gen.oneOf(cands), 3 -> Gen.choose(-60.0, 60.0)))
+      missingRate <- Gen.oneOf(0.0, 0.0, 0.2, 0.5, 1.0)
+      cells <- Gen.listOfN(rows, for {
+        u <- Gen.choose(0.0, 1.0)
+        nan <- Gen.oneOf(true, false)
+        x <- Gen.oneOf(pool)
+      } yield if (u < missingRate) (if (nan) Some(Double.NaN) else None) else Some(x))
+    } yield cells.toVector
+  }
+
+  def frame(names: Seq[String], cols: Seq[Vector[Option[Double]]],
+      partitions: Int): DataFrame = {
+    val spark = TestSpark.spark
+    val rows = cols.head.indices.map(r => Row(cols.map(_(r).getOrElse(null)): _*))
+    val schema = StructType(names.map(StructField(_, DoubleType, nullable = true)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, partitions), schema)
+  }
+
+  val genRows: Gen[Int] =
+    Gen.frequency(3 -> Gen.choose(1, 4), 4 -> Gen.choose(5, 60), 2 -> Gen.choose(61, 400))
+
+  def sameCells(got: Array[Row], want: Array[Row]): Option[String] = {
+    if (got.length != want.length) return Some(s"${got.length} rows vs ${want.length}")
+    got.indices.iterator.flatMap { r =>
+      (0 until want(r).length).iterator.collect {
+        case c if got(r).isNullAt(c) != want(r).isNullAt(c) ||
+            (!want(r).isNullAt(c) && java.lang.Double.doubleToLongBits(got(r).getDouble(c)) !=
+              java.lang.Double.doubleToLongBits(want(r).getDouble(c))) =>
+          s"row $r col $c: ${got(r).get(c)} vs oracle ${want(r).get(c)}"
+      }
+    }.nextOption()
+  }
+
   /** Chain shapes: the layouts a fit produces in both orientations,
     * and cut lists in arbitrary order like a sentinel stitch can give.
     */

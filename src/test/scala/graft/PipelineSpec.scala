@@ -82,4 +82,21 @@ class PipelineSpec extends AnyFunSuite {
     timedOut.unpersist()
     graft.ops.DedupOps.unpersistAll()
   }
+
+  test("a failed stage count surfaces its own exception, not ExecutionException") {
+    val ok = spark.range(10).toDF("id")
+    val boom = udf((x: Long) => if (x == 3L) throw new IllegalStateException("stage boom") else x)
+    val failing = spark.range(10).toDF("id").where(boom(col("id")) >= 0L)
+    assert(PipelineDemo.countConcurrently(Seq("ok" -> ok, "ok2" -> ok)) ==
+      Seq("ok" -> 10L, "ok2" -> 10L))
+    // what the failing frame's own count throws, called directly
+    val direct = intercept[Exception](failing.count())
+    val surfaced = intercept[Exception](
+      PipelineDemo.countConcurrently(Seq("ok" -> ok, "failing" -> failing)))
+    assert(!surfaced.isInstanceOf[java.util.concurrent.ExecutionException], surfaced)
+    assert(surfaced.getClass == direct.getClass, surfaced)
+    val causes = Iterator.iterate[Throwable](surfaced)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage == "stage boom"), causes)
+  }
 }
