@@ -24,16 +24,6 @@ object Plans {
     }
 
     val df = SparkEntry.lcgFrame(spark, sfDir)
-    show("stats pass (melt+groupBy)") {
-      val cols = Seq("extendedprice", "quantity", "discount")
-      val stackExpr = s"stack(${cols.length}, " +
-        cols.map(c => s"'$c', cast(`$c` as double)").mkString(", ") +
-        ") as (variable, value)"
-      df.selectExpr(stackExpr, "cast(`target` as bigint) as t")
-        .withColumn("value", when(isnan(col("value")), lit(null)).otherwise(col("value")))
-        .groupBy("variable", "value")
-        .agg(count(lit(1)).as("cnt"), sum("t").as("tsum"))
-    }
     show("transform (apply)") {
       val m = graft.spark.WoeBinning.fit(df, "target", Seq("extendedprice"),
         graft.spark.WoeFitOptions(nThreshold = Some(300)))

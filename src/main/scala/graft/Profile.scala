@@ -30,7 +30,7 @@ object Profile {
     // ---- fit phases
     val df = SparkEntry.lcgFrame(spark, sfDir).cache()
     time("lcgFrame count (cache)")(df.count())
-    val stats = time("sufficientStats collect") {
+    val stats = time("sufficientStats") {
       graft.spark.WoeBinning.sufficientStats(df, "target", Seq("extendedprice"))
     }
     val s = stats("extendedprice")
@@ -131,12 +131,13 @@ object Profile {
     }
     time("transform + aggregate, new batch")(scoreBatch())
     time("  transform + aggregate, 2nd pass")(scoreBatch())
-    // stats sub-stages: the groupBy agg alone vs the driver collect
+    // stats sub-stages: the fit's one narrow stats job vs the driver's
+    // build of the kernels' per-variable stats
     locally {
-      val agg = graft.spark.WoeBinning.statsAggregation(df, "target", Seq("extendedprice"))
-      time("  statsAgg count only")(agg.count())
-      val rows = time("  statsAgg collect")(agg.collect())
-      time("  statsFromRows driver")(graft.spark.WoeBinning.statsFromRows(rows))
+      val fs = time("  FitStats pass (one job)") {
+        graft.spark.FitStats.of(df, "target", Seq("extendedprice"))
+      }
+      time("  FitStats.varStats driver")(fs.varStats(Seq("extendedprice")))
     }
 
     // ---- streaming fit (needs the testdata file layout — a ScaleUp

@@ -16,9 +16,11 @@ import scala.collection.parallel.CollectionConverters._
   * the updated stats on every trigger and hand the refreshed model to
   * the caller.
   *
-  * The melt/aggregation and rows→stats conversion are the SAME code as
-  * the batch fit (WoeBinning.statsAggregation / statsFromRows /
-  * fitOne), so streaming == batch equality holds by construction.
+  * The stream keeps the melt/aggregation (WoeBinning.statsAggregation
+  * / statsFromTuples); the batch fit computes the same stats in one
+  * narrow pass (graft.spark.FitStats) and shares the kernel dispatch
+  * (fitOne), so StreamingWoeSpec's streaming == batch equality
+  * cross-checks the two stats producers.
   *
   * Scale note: state is O(distinct (variable, value)) and each trigger
   * collects it, like the batch path.  For unbounded-cardinality
@@ -72,6 +74,7 @@ object StreamingWoe {
       preBucketEdges: Map[String, Seq[Double]] = Map.empty,
       maxDistinctState: Int = 1 << 20)(
       onModel: (Long, WoeBinningModel) => Unit): StreamingQuery = {
+    WoeBinning.requireDistinctInputs(inputCols)
     preBucketEdges.keys.foreach(c => require(inputCols.contains(c),
       s"fitStream: preBucketEdges column '$c' is not an input column"))
     val bucketed = preBucketEdges.foldLeft(stream) {

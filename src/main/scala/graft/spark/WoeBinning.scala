@@ -26,12 +26,21 @@ final case class WoeFitOptions(
     sortOverload: Option[Boolean] = None,
     maxDistinct: Option[Int] = None)
 
-/** Spark-side fit: ONE distributed pass computes exact integer
-  * sufficient statistics `(variable, value) → (count, target_sum)` for
-  * all features (unpivot → groupBy, map-side partial aggregation, a
-  * single shuffle), then the iterative MOB kernels (graft.core.Kernels)
-  * run driver-side over the collected per-variable stats — bounded by
-  * distinct-value count, not row count.
+/** Spark-side fit: ONE narrow pass computes exact integer sufficient
+  * statistics `(variable, value) → (count, target_sum)` for all
+  * features ([[FitStats]]), then the iterative MOB kernels
+  * (graft.core.Kernels) run driver-side over the collected
+  * per-variable stats.
+  *
+  * The pass reads the feature columns and the target cast to double
+  * over `queryExecution.toRdd`.  Each task buffers a fixed block of rows
+  * in primitive arrays, sorts and run-length encodes them into sorted
+  * (value, count, Σtarget) runs plus a missing bucket, and folds each
+  * block into its runs with a sorted merge that adds the counts of equal
+  * values; `treeReduce` merges the tasks' runs the same way.  There is no
+  * melt and no shuffle of the data, and the driver decodes no rows.  A
+  * task returns O(partition distinct) values per variable, so the
+  * collect is bounded by distinct values, not rows.
   *
   * This replaces the reference's per-column process fan-out that
   * pickles the full column to each worker (binning.py:82,89-99) and its
@@ -39,12 +48,21 @@ final case class WoeFitOptions(
   */
 object WoeBinning {
 
-  /** The melt + exact-integer stats aggregation, shared by the batch
-    * fit and the streaming incremental fit (StreamingWoe).
-    */
   private def sqlStr(s: String): String = "'" + s.replace("'", "\\'") + "'"
-  private def sqlId(s: String): String = "`" + s.replace("`", "``") + "`"
+  private[spark] def sqlId(s: String): String = "`" + s.replace("`", "``") + "`"
 
+  /** Fails fast on a column listed twice: each listing would count
+    * its rows again.
+    */
+  private[graft] def requireDistinctInputs(inputCols: Seq[String]): Unit =
+    inputCols.diff(inputCols.distinct).headOption.foreach(c =>
+      throw new IllegalArgumentException(
+        s"woe_binning: input column '$c' is listed more than once"))
+
+  /** The melt + exact-integer stats aggregation (`stack` → groupBy) of
+    * the streaming fit (StreamingWoe) and the cross-check of the batch
+    * pass ([[FitStats]]), which `fit` runs instead.
+    */
   def statsAggregation(df: DataFrame, targetCol: String, inputCols: Seq[String]): DataFrame = {
     require(inputCols.nonEmpty, "woe_binning: no feature columns to fit")
     val stackExpr = s"stack(${inputCols.length}, " +
@@ -73,28 +91,15 @@ object WoeBinning {
 
   /** One collected stats row: (variable, value, cnt, tsum, tcnt, tbad)
     * — the tuple form the typed collects below deserialize straight
-    * into (codegen'd encoder, no per-field GenericRow boxing/decode;
-    * r19, VERDICT ask #7: the Row decode cost ~0.3-0.4 s of each
-    * near-unique fit per FitProbe).
+    * into (codegen'd encoder, no per-field GenericRow boxing/decode).
     */
   private[graft] type StatsTuple =
     (String, Option[Double], Long, Option[Long], Long, Long)
 
-  /** Collected stats rows → per-variable exact sufficient statistics
-    * (Row adapter for ad-hoc callers; the engine's own collects are
-    * typed and go straight to [[statsFromTuples]]).
-    */
-  def statsFromRows(rows: Array[Row]): Map[String, Kernels.VarStats] =
-    statsFromTuples(rows.map(r => (
-      r.getString(0),
-      if (r.isNullAt(1)) None else Some(r.getDouble(1)),
-      r.getLong(2),
-      if (r.isNullAt(3)) None else Some(r.getLong(3)),
-      r.getLong(4), r.getLong(5))))
-
-  /** Tuple-typed core of [[statsFromRows]] — fails fast on null target
-    * values: a group whose targets are all null has a NULL sum, and
-    * the reference's 0/1-target contract never allows that.
+  /** Collected [[statsAggregation]] rows → per-variable exact
+    * sufficient statistics — fails fast on null target values: a group
+    * whose targets are all null has a NULL sum, and the reference's
+    * 0/1-target contract never allows that.
     */
   private[graft] def statsFromTuples(
       rows: Array[StatsTuple]): Map[String, Kernels.VarStats] =
@@ -157,25 +162,16 @@ object WoeBinning {
         nanCount + valCnt, nanTsum + valTsum)
     }
 
-  /** Collected exact stats for every variable in one job. */
+  /** Exact stats for every variable from one narrow job
+    * ([[FitStats.of]]); `maxDistinct` pre-bins first ([[preBin]]).
+    */
   def sufficientStats(
       df: DataFrame,
       targetCol: String,
       inputCols: Seq[String],
       maxDistinct: Option[Int] = None): Map[String, Kernels.VarStats] = {
     val base = maxDistinct.map(m => preBin(df, inputCols, m)).getOrElse(df)
-    // collect UNSORTED and sort on the driver (r18, reversing the r-early
-    // Spark-side orderBy): measured at sf0.1's 583k-distinct column, the
-    // range-sort exchange added 0.55-0.9 s to the agg+collect while the
-    // driver fallback sort in statsFromRows costs ~0.3 s — the cluster
-    // sort pays a full extra shuffle of the O(distinct) rows (sampling +
-    // range exchange) to save a cheaper in-memory sort.  The collect is
-    // TYPED (r19): the tuple encoder deserializes straight to primitives
-    // instead of a GenericRow per stats row.  Same stats either way, so
-    // the fit is bit-identical.
-    import df.sparkSession.implicits._
-    statsFromTuples(
-      statsAggregation(base, targetCol, inputCols).as[StatsTuple].collect())
+    FitStats.of(base, targetCol, inputCols).varStats(inputCols)
   }
 
   /** One variable's bins from its collected stats — the per-variable
@@ -243,6 +239,7 @@ object WoeBinning {
       targetCol: String,
       inputCols: Seq[String],
       opts: WoeFitOptions = WoeFitOptions()): WoeBinningModel = {
+    requireDistinctInputs(inputCols)
     val stats = sufficientStats(df, targetCol, inputCols, opts.maxDistinct)
     val n = stats.valuesIterator.map(_.totalRows).maxOption.getOrElse(0L)
     val nThr = opts.nThreshold.getOrElse(math.ceil(n.toDouble / 20.0))
@@ -289,6 +286,7 @@ object WoeBinning {
       inputCols: Seq[String],
       groupCol: String,
       opts: WoeFitOptions = WoeFitOptions()): Seq[(String, WoeBinningModel)] = {
+    requireDistinctInputs(inputCols)
     val base = opts.maxDistinct.map(m => preBin(df, inputCols, m)).getOrElse(df)
     val stackExpr = s"stack(${inputCols.length}, " +
       inputCols.map(c => s"${sqlStr(c)}, cast(${sqlId(c)} as double)").mkString(", ") +
@@ -308,9 +306,9 @@ object WoeBinning {
         sum(when(isnan(col("traw")) ||
             (col("traw") =!= 0.0 && col("traw") =!= 1.0), 1L)
           .otherwise(0L)).as("tbad"))
-      // typed + unsorted: statsFromTuples' driver sort (see
-      // sufficientStats) — the keyed range-sort exchange costs more
-      // than sorting the O(distinct) rows in memory
+      // typed + unsorted: statsFromTuples sorts on the driver — the
+      // keyed range-sort exchange costs more than sorting the
+      // O(distinct) rows in memory
       .as[(String, String, Option[Double], Long, Option[Long], Long, Long)]
       .collect()
     grouped.groupBy(_._1).toSeq.sortBy(_._1).map { case (g, rows) =>
@@ -388,7 +386,7 @@ object WoeBinning {
       .where(col("value").isNotNull && !isnan(col("value")))
       .groupBy("variable", "value")
       .agg(count(lit(1)).as("cnt"))
-      // typed + unsorted collect + driver sort (see sufficientStats)
+      // typed + unsorted collect + driver sort (as fitByGroup)
       .as[(String, Double, Long)]
       .collect()
     val byVar = grouped.groupBy(_._1)

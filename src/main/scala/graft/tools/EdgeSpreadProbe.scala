@@ -5,8 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Dev A/B (r18): does fanning the 1-row-group documents scan out
   * before a HEAVY per-row stage (tokenize + bigram explode + partial
-  * agg) pay, where it measurably did NOT pay for the fit's light melt
-  * (FitProbe)?  Round-robin interleaved in one JVM session.
+  * agg) pay, where it measurably did NOT pay for the fit's light
+  * stats pass (then a melt + groupBy; the fit now reads its stats in
+  * one narrow pass, graft.spark.FitStats)?  Round-robin interleaved in
+  * one JVM session.
   */
 object EdgeSpreadProbe {
   def main(args: Array[String]): Unit = {

@@ -1,0 +1,274 @@
+package graft
+
+import java.lang.Double.doubleToLongBits
+import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import graft.core.{Kernels, WoeBin, WoeConfig}
+import graft.spark.{FitStats, WoeBinning, WoeFitOptions}
+
+/** The fit's narrow stats pass (`FitStats`, through
+  * `WoeBinning.sufficientStats`) equals the grouped aggregation it
+  * replaced, `statsFromTuples(statsAggregation(..).collect())`, bit for
+  * bit: every value by `doubleToLongBits`, every count and every sum.
+  *
+  * Frames come from ScalaCheck generators run on fixed seeds; a failure
+  * names its seed.  Cells mix −0.0 next to 0.0, NaN and null, ±inf,
+  * values near ±Double.MaxValue, and double, int, decimal and
+  * string-typed columns, some all-missing, over more partitions than
+  * rows (empty partitions).  Each frame runs at `shuffle.partitions` 1,
+  * 7 or 64, as it is, repartitioned, or reordered.
+  */
+class FitStatsSpec extends AnyFunSuite {
+  import FitStatsSpec._
+  private lazy val spark = TestSpark.spark
+
+  /** The grouped aggregation `fit` ran before the narrow pass. */
+  private def oldStats(df: DataFrame, target: String,
+      cols: Seq[String]): Map[String, Kernels.VarStats] = {
+    import spark.implicits._
+    WoeBinning.statsFromTuples(
+      WoeBinning.statsAggregation(df, target, cols).as[WoeBinning.StatsTuple].collect())
+  }
+
+  private def withShufflePartitions[A](n: Int)(f: => A): A = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  private val genTrial: Gen[Trial] = for {
+    nCols <- Gen.choose(1, 4)
+    types <- Gen.listOfN(nCols, Gen.frequency(
+      4 -> Gen.const(DoubleCol), 1 -> Gen.const(IntCol),
+      1 -> Gen.const(DecimalCol), 1 -> Gen.const(StringCol)))
+    rows <- Gen.frequency(2 -> Gen.choose(0, 4), 4 -> Gen.choose(5, 60),
+      3 -> Gen.choose(61, 300))
+    cells <- Gen.sequence[List[Vector[Option[Double]]], Vector[Option[Double]]](
+      types.map(genColumn(rows, _)))
+    target <- Gen.listOfN(rows, Gen.oneOf(0, 1))
+    partitions <- Gen.choose(1, 8)
+    shufflePartitions <- Gen.oneOf(1, 7, 64)
+    reshape <- Gen.oneOf(AsIs, Repartitioned, Reordered)
+  } yield Trial(types.zip(cells), target.toVector, partitions, shufflePartitions, reshape)
+
+  private def frame(t: Trial): DataFrame = {
+    val names = t.cols.indices.map(i => s"c$i")
+    val schema = StructType(names.zip(t.cols).map { case (n, (ty, _)) =>
+      StructField(n, ty.sqlType, nullable = true) } :+ StructField("target", IntegerType))
+    val rows = t.target.indices.map(r =>
+      Row(t.cols.map { case (ty, c) => c(r).map(ty.cell).orNull } :+ t.target(r): _*))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, t.partitions), schema)
+    t.reshape match {
+      case AsIs => df
+      case Repartitioned => df.repartition(col("target"), col(names.head))
+      case Reordered => df.orderBy(rand(7), col("target"))
+    }
+  }
+
+  private def check(t: Trial, seed: Long, cov: Coverage): Coverage = {
+    val cols = t.cols.indices.map(i => s"c$i")
+    withShufflePartitions(t.shufflePartitions) {
+      val df = frame(t)
+      sameStats(WoeBinning.sufficientStats(df, "target", cols),
+        oldStats(df, "target", cols)).foreach(msg => fail(s"seed $seed ($t): $msg"))
+    }
+    val present = t.cols.map { case (ty, c) => c.flatten.filterNot(_.isNaN).map(ty.asDouble) }
+    cov.copy(
+      types = cov.types ++ t.cols.map(_._1),
+      signedZeros = cov.signedZeros + present.count(p =>
+        p.exists(x => doubleToLongBits(x) == doubleToLongBits(-0.0)) && p.contains(0.0)),
+      nan = cov.nan + t.cols.count(_._2.exists(_.exists(_.isNaN))),
+      nulls = cov.nulls + t.cols.count(_._2.contains(None)),
+      infinite = cov.infinite + present.count(_.exists(_.isInfinite)),
+      huge = cov.huge + present.count(_.exists(x => !x.isInfinite && math.abs(x) > 1e300)),
+      allMissing = cov.allMissing + present.count(p => p.isEmpty) * (if (t.target.nonEmpty) 1 else 0),
+      emptyPartition = cov.emptyPartition + (if (t.target.length < t.partitions) 1 else 0),
+      shufflePartitions = cov.shufflePartitions + t.shufflePartitions,
+      reshapes = cov.reshapes + t.reshape)
+  }
+
+  test("narrow stats pass == grouped aggregation, bit for bit (generated frames)") {
+    val cov = (1L to 60L).foldLeft(Coverage()) { (cov, seed) =>
+      check(genTrial.pureApply(Gen.Parameters.default, Seed(seed)), seed, cov)
+    }
+    info(cov.toString)
+    assert(cov.types == Set(DoubleCol, IntCol, DecimalCol, StringCol), cov)
+    assert(cov.signedZeros > 0 && cov.nan > 0 && cov.nulls > 0, cov)
+    assert(cov.infinite > 0 && cov.huge > 0 && cov.allMissing > 0, cov)
+    assert(cov.emptyPartition > 0, cov)
+    assert(cov.shufflePartitions == Set(1, 7, 64), cov)
+    assert(cov.reshapes == Set(AsIs, Repartitioned, Reordered), cov)
+  }
+
+  test("narrow stats pass == grouped aggregation across block boundaries in a partition") {
+    // the first partition holds 2.5 blocks: blocks fold into each other
+    // within the task, then the two tasks merge.  x repeats in every
+    // block; y is unique (the tiers merge); z holds −0.0, 0.0 and NaN
+    val big = FitStats.BlockRows * 5L / 2
+    val df = spark.range(0, big + 5000, 1, 1).union(spark.range(big + 5000, big + 9000, 1, 1))
+      .select(
+        (col("id") % 997).cast("double").as("x"),
+        (col("id") * 0.5).as("y"),
+        when(col("id") % 5 === 0, lit(-0.0)).when(col("id") % 5 === 1, lit(0.0))
+          .when(col("id") % 5 === 2, lit(Double.NaN)).otherwise(col("id") % 3).as("z"),
+        ((col("id") * 7919) % 13 < 4).cast("int").as("target"))
+    for (n <- Seq(1, 7)) withShufflePartitions(n) {
+      sameStats(WoeBinning.sufficientStats(df, "target", Seq("x", "y", "z")),
+        oldStats(df, "target", Seq("x", "y", "z"))).foreach(msg => fail(s"$n: $msg"))
+    }
+  }
+
+  test("fit with sepValue or maxDistinct == fit over the grouped aggregation") {
+    // the model the grouped stats give, through fit's own steps
+    def oldFit(df: DataFrame, cols: Seq[String], opts: WoeFitOptions) = {
+      val base = opts.maxDistinct.map(m => WoeBinning.preBin(df, cols, m)).getOrElse(df)
+      val stats = oldStats(base, "target", cols)
+      val n = stats.valuesIterator.map(_.totalRows).max
+      val cfg = WoeConfig(opts.nThreshold.getOrElse(math.ceil(n / 20.0)),
+        opts.nOccurrences, opts.pThreshold, opts.sortOverload, opts.mergeThreshold)
+      cols.map(c => c -> WoeBinning.fitOne(c, "target", stats, cfg, opts.sepValue))
+    }
+    val df = spark.range(0, 6000, 1, 5).select(
+      when(col("id") % 9 === 0, lit(-1.0)).when(col("id") % 31 === 0, lit(null))
+        .otherwise((col("id") * 13) % 40).cast("double").as("x"),
+      (col("id") * 0.37 % 500).as("y"),
+      (rand(3) < (col("id") % 40 + 5) / 60.0).cast("int").as("target"))
+    for (opts <- Seq(WoeFitOptions(nThreshold = Some(100), sepValue = Some(-1.0)),
+        WoeFitOptions(maxDistinct = Some(50)), WoeFitOptions(nThreshold = Some(200),
+          maxDistinct = Some(20), sepValue = Some(-1.0)))) {
+      val cols = if (opts.sepValue.isDefined) Seq("x") else Seq("x", "y")
+      val got = WoeBinning.fit(df, "target", cols, opts).fitted
+      val want = oldFit(df, cols, opts)
+      assert(got.map(v => v._1 -> v._2.map(binBits)) == want.map(v => v._1 -> v._2.map(binBits)),
+        s"$opts: ${got.map(_._2.length)} vs ${want.map(_._2.length)} bins")
+    }
+  }
+
+  test("target errors: a bad target wins over a null one; both name a variable and a value") {
+    def frameOf(targets: Seq[Any]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(targets.zipWithIndex.map { case (t, i) =>
+        Row(i.toDouble, t) }, 3),
+      StructType(Seq(StructField("x", DoubleType), StructField("target", DoubleType))))
+    def message(targets: Seq[Any]) = intercept[IllegalArgumentException] {
+      WoeBinning.sufficientStats(frameOf(targets), "target", Seq("x"))
+    }.getMessage
+    for (bad <- Seq(2.0, 0.5, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      val m = message(Seq(0.0, null, 1.0, bad, null, 0.0))
+      assert(m.contains("target must be 0/1 (variable 'x', value "), s"$bad: $m")
+    }
+    assert(message(Seq(0.0, 1.0, null, 1.0)) ==
+      "woe_binning: target contains nulls (variable 'x', value 2.0)")
+  }
+}
+
+object FitStatsSpec {
+  sealed trait ColType {
+    def sqlType: DataType
+    /** The cell stored for a drawn value. */
+    def cell(x: Double): Any
+    /** The value the stored cell casts to. */
+    def asDouble(x: Double): Double = x
+  }
+  case object DoubleCol extends ColType {
+    val sqlType = DoubleType
+    def cell(x: Double): Any = x
+  }
+  case object IntCol extends ColType {
+    val sqlType = IntegerType
+    def cell(x: Double): Any = x.toInt
+  }
+  case object DecimalCol extends ColType {
+    val sqlType = DecimalType(38, 3)
+    def cell(x: Double): Any = new java.math.BigDecimal(x).setScale(3, java.math.RoundingMode.HALF_UP)
+    override def asDouble(x: Double): Double = cell(x).asInstanceOf[java.math.BigDecimal].doubleValue
+  }
+  case object StringCol extends ColType {
+    val sqlType = StringType
+    def cell(x: Double): Any = x.toString // "NaN", "-0.0", "Infinity", "1.7976931348623157E308"
+  }
+
+  sealed trait Reshape
+  case object AsIs extends Reshape
+  case object Repartitioned extends Reshape
+  case object Reordered extends Reshape
+
+  final case class Trial(
+      cols: Seq[(ColType, Vector[Option[Double]])],
+      target: Vector[Int],
+      partitions: Int,
+      shufflePartitions: Int,
+      reshape: Reshape) {
+    override def toString: String =
+      s"${target.length} rows, types ${cols.map(_._1).mkString(",")}, " +
+        s"$partitions partitions, shuffle.partitions $shufflePartitions, $reshape"
+  }
+
+  final case class Coverage(
+      types: Set[ColType] = Set.empty,
+      signedZeros: Int = 0,
+      nan: Int = 0,
+      nulls: Int = 0,
+      infinite: Int = 0,
+      huge: Int = 0,
+      allMissing: Int = 0,
+      emptyPartition: Int = 0,
+      shufflePartitions: Set[Int] = Set.empty,
+      reshapes: Set[Reshape] = Set.empty)
+
+  private val Huge = Seq(Double.MaxValue, -Double.MaxValue, Math.nextDown(Double.MaxValue),
+    Math.nextUp(-Double.MaxValue))
+  private val Special = Seq(0.0, -0.0, Double.PositiveInfinity, Double.NegativeInfinity,
+    Double.MinPositiveValue)
+
+  /** A small pool per column, so values repeat across partitions. */
+  def genColumn(rows: Int, ty: ColType): Gen[Vector[Option[Double]]] = {
+    val values: Gen[Double] = ty match {
+      case IntCol => Gen.oneOf(Gen.choose(-3, 3).map(_.toDouble),
+        Gen.oneOf(Int.MaxValue.toDouble, Int.MinValue.toDouble))
+      case DecimalCol => Gen.oneOf(Gen.choose(-5.0, 5.0), Gen.oneOf(0.0, 1e30, -1e30, 0.0005))
+      case DoubleCol | StringCol => Gen.frequency(5 -> Gen.oneOf(Special ++ Huge),
+        3 -> Gen.choose(-3, 3).map(_.toDouble), 2 -> Gen.choose(-5.0, 5.0))
+    }
+    for {
+      poolSize <- Gen.choose(1, 8)
+      pool <- Gen.listOfN(poolSize, values)
+      missingRate <- Gen.oneOf(0.0, 0.0, 0.2, 0.5, 1.0)
+      cells <- Gen.listOfN(rows, for {
+        u <- Gen.choose(0.0, 1.0)
+        nan <- Gen.oneOf(true, false)
+        x <- Gen.oneOf(pool)
+      } yield
+        if (u >= missingRate) Some(x)
+        else if (nan && (ty == DoubleCol || ty == StringCol)) Some(Double.NaN)
+        else None)
+    } yield cells.toVector
+  }
+
+  private def bits(s: Kernels.VarStats) =
+    (s.groups.map { case (v, c, t) => (doubleToLongBits(v), c, t) },
+      s.nanCount, s.nanTsum, s.totalRows, s.totalTsum)
+
+  /** The first difference between two stats maps, if any. */
+  def sameStats(got: Map[String, Kernels.VarStats],
+      want: Map[String, Kernels.VarStats]): Option[String] =
+    if (got.keySet != want.keySet) Some(s"variables ${got.keySet} vs ${want.keySet}")
+    else want.keys.toSeq.sorted.iterator.collect {
+      case v if bits(got(v)) != bits(want(v)) =>
+        val (g, w) = (got(v), want(v))
+        val at = g.groups.indices.find(i => i >= w.groups.length ||
+          bits(g.copy(groups = Vector(g.groups(i)))) != bits(w.copy(groups = Vector(w.groups(i)))))
+        s"variable $v: missing (${g.nanCount}, ${g.nanTsum}) vs (${w.nanCount}, ${w.nanTsum}), " +
+          s"totals (${g.totalRows}, ${g.totalTsum}) vs (${w.totalRows}, ${w.totalTsum}), " +
+          s"${g.groups.length} vs ${w.groups.length} groups, first differing group " +
+          at.map(i => s"$i: ${g.groups(i)} vs ${w.groups.lift(i)}").getOrElse("none")
+    }.nextOption()
+
+  def binBits(b: WoeBin): Seq[Any] = b.productIterator.map {
+    case d: Double => doubleToLongBits(d)
+    case x => x
+  }.toSeq
+}

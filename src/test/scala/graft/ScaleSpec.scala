@@ -114,4 +114,34 @@ class ScaleSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("sep_value"))
   }
+
+  // a column listed twice would be counted twice: the melt stacks it
+  // once per listing, doubling its rows and its target sum
+  private val dupCols = Seq("quantity", "discount", "quantity")
+
+  test("duplicate inputCols fail fast in fit, naming the column") {
+    val e = intercept[IllegalArgumentException] {
+      WoeBinning.fit(sf0001, "target", dupCols, WoeFitOptions(nThreshold = Some(300)))
+    }
+    assert(e.getMessage.contains("input column 'quantity' is listed more than once"))
+  }
+
+  test("duplicate inputCols fail fast in fitByGroup, naming the column") {
+    val e = intercept[IllegalArgumentException] {
+      WoeBinning.fitByGroup(sf0001.withColumn("g", col("quantity") % 2), "target",
+        dupCols, "g", WoeFitOptions(nThreshold = Some(300)))
+    }
+    assert(e.getMessage.contains("input column 'quantity' is listed more than once"))
+  }
+
+  test("duplicate inputCols fail fast in fitStream, before the query starts") {
+    val stream = spark.readStream.format("rate").load()
+      .select(col("value").cast("double").as("quantity"),
+        col("value").cast("double").as("discount"), (col("value") % 2).as("target"))
+    val e = intercept[IllegalArgumentException] {
+      graft.ops.StreamingWoe.fitStream(stream, "target", dupCols,
+        graft.core.WoeConfig(nThreshold = 300))((_, _) => ())
+    }
+    assert(e.getMessage.contains("input column 'quantity' is listed more than once"))
+  }
 }

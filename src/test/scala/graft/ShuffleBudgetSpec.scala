@@ -34,13 +34,14 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     acc.get()
   }
 
-  /** What `f` ran: jobs, shuffle-write bytes, and the serialized task
-    * result bytes the driver collected.
+  /** What `f` ran: jobs, tasks, shuffle-write bytes, and the serialized
+    * task result bytes the driver collected.
     */
-  private final case class JobCost(jobs: Int, shuffleBytes: Long, resultBytes: Long)
+  private final case class JobCost(jobs: Int, tasks: Int, shuffleBytes: Long, resultBytes: Long)
 
   private def jobCost(f: => Unit): JobCost = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
     val shuffle = new java.util.concurrent.atomic.AtomicLong(0L)
     val result = new java.util.concurrent.atomic.AtomicLong(0L)
     val listener = new SparkListener {
@@ -49,6 +50,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val m = te.taskMetrics
+        tasks.incrementAndGet()
         if (m != null) {
           shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           result.addAndGet(m.resultSize)
@@ -61,7 +63,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try { f; TestListenerBus.drain(sc) }
     finally sc.removeSparkListener(listener)
-    JobCost(jobs.get(), shuffle.get(), result.get())
+    JobCost(jobs.get(), tasks.get(), shuffle.get(), result.get())
   }
 
   /** (total shuffle-read bytes, max single-task shuffle-read bytes)
@@ -130,24 +132,44 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       s"rank funnel: one task read $maxTask of $total shuffle bytes")
   }
 
-  test("fit stats pass shuffles O(distinct values), far below corpus bytes") {
-    // low-cardinality columns (quantity ~50 distinct, discount ~11):
-    // map-side combine must collapse the melt to per-partition
-    // distinct rows.  (A near-unique column like extendedprice
-    // legitimately shuffles ~corpus rows — distinct ≈ rows is the
-    // documented q_fit_exact stress case, not a regression.)
-    val df = TestSpark.lcgFrame(sf01).cache()
-    df.count() // materialize outside the measurement
-    val corpusBytes = 600000L * 8 * 2
-    val bytes = shuffleBytes {
-      graft.spark.WoeBinning.fit(df, "target", Seq("quantity", "discount"),
-        graft.spark.WoeFitOptions(nThreshold = Some(300)))
-      ()
+  test("fit stats pass: one narrow job, no shuffle, collect bounded by distinct values") {
+    // the fit reads its stats in one narrow pass (FitStats): each task
+    // returns sorted (value, count, Σtarget) runs, merged by treeReduce.
+    // No melt and no groupBy exchange: up to 4 partitions, treeReduce
+    // merges on the driver and nothing is shuffled
+    val cols = Seq("quantity", "discount") // about 50 and 11 distinct values
+    val distinct = {
+      val d = TestSpark.lcgFrame(sf01).agg(countDistinct("quantity"), countDistinct("discount")).head()
+      d.getLong(0) + d.getLong(1)
     }
-    df.unpersist()
-    assert(bytes > 0, "expected a (small) stats shuffle")
-    assert(bytes < corpusBytes / 20,
-      s"stats pass shuffled $bytes bytes — corpus-scale, not distinct-scale")
+    def fitCost(partitions: Int): JobCost = {
+      val df = TestSpark.lcgFrame(sf01).repartition(partitions).cache()
+      df.count() // the repartition shuffle happens outside the meter
+      try jobCost {
+        graft.spark.WoeBinning.fit(df, "target", cols,
+          graft.spark.WoeFitOptions(nThreshold = Some(300)))
+        ()
+      } finally df.unpersist()
+    }
+    for (p <- Seq(1, 4)) {
+      val cost = fitCost(p)
+      assert(cost.jobs == 1, s"$p partitions: ${cost.jobs} jobs")
+      assert(cost.shuffleBytes == 0L, s"$p partitions: fit shuffled ${cost.shuffleBytes} bytes")
+    }
+    // at 64 partitions treeReduce adds one level of sqrt(64) = 8
+    // merging tasks; each returns at most every distinct value (24 bytes:
+    // value, count, Σtarget).  Every task, the 64 that shuffle partial
+    // runs included, also returns its metrics (about 2-4 kB).  A per-row
+    // collect would be at least 8 bytes for each of 600k rows
+    val cost = fitCost(64)
+    val bound = 8L * 24L * distinct + cost.tasks * 8192L
+    assert(cost.jobs == 1, s"64 partitions: ${cost.jobs} jobs")
+    assert(cost.resultBytes > 0L && cost.resultBytes < bound,
+      s"64 partitions: collected ${cost.resultBytes} bytes, bound $bound " +
+        s"($distinct distinct values, ${cost.tasks} tasks)")
+    assert(cost.tasks <= 64 + 8, s"64 partitions: ${cost.tasks} tasks")
+    info(s"64 partitions: ${cost.resultBytes} task-result bytes from ${cost.tasks} tasks, bound $bound, " +
+      s"${cost.shuffleBytes} treeReduce shuffle bytes ($distinct distinct values)")
   }
 
   test("transform (apply) is shuffle-free") {
