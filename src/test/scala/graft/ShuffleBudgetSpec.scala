@@ -132,11 +132,12 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       s"rank funnel: one task read $maxTask of $total shuffle bytes")
   }
 
-  test("fit stats pass: one narrow job, no shuffle, collect bounded by distinct values") {
+  test("fit stats pass shuffles O(distinct values), far below corpus bytes") {
     // the fit reads its stats in one narrow pass (FitStats): each task
     // returns sorted (value, count, Σtarget) runs, merged by treeReduce.
     // No melt and no groupBy exchange: up to 4 partitions, treeReduce
-    // merges on the driver and nothing is shuffled
+    // merges on the driver and nothing is shuffled; above that only the
+    // per-partition runs (O(distinct values) each) are shuffled
     val cols = Seq("quantity", "discount") // about 50 and 11 distinct values
     val distinct = {
       val d = TestSpark.lcgFrame(sf01).agg(countDistinct("quantity"), countDistinct("discount")).head()
@@ -168,6 +169,11 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       s"64 partitions: collected ${cost.resultBytes} bytes, bound $bound " +
         s"($distinct distinct values, ${cost.tasks} tasks)")
     assert(cost.tasks <= 64 + 8, s"64 partitions: ${cost.tasks} tasks")
+    // the treeReduce level shuffles the 64 partial runs, never the rows
+    val corpusBytes = 600000L * 8 * 2
+    assert(cost.shuffleBytes > 0L, "64 partitions: expected a (small) treeReduce shuffle")
+    assert(cost.shuffleBytes < corpusBytes / 20,
+      s"64 partitions: stats pass shuffled ${cost.shuffleBytes} bytes — corpus-scale, not distinct-scale")
     info(s"64 partitions: ${cost.resultBytes} task-result bytes from ${cost.tasks} tasks, bound $bound, " +
       s"${cost.shuffleBytes} treeReduce shuffle bytes ($distinct distinct values)")
   }
