@@ -396,25 +396,23 @@ object Kernels {
   /** Exact interpolated median over the non-null values (pandas
     * `Series.median`, binning.py:297/302), from grouped stats.
     */
-  def exactMedian(groups: Vector[(Double, Long, Long)]): Double = {
-    val n = groups.iterator.map(_._2).sum
-    if (n == 0) return Double.NaN
-    def valueAt(pos: Long): Double = { // 0-based order statistic
-      var c = 0L
-      val it = groups.iterator
-      while (it.hasNext) {
-        val (v, cnt, _) = it.next()
-        if (pos < c + cnt) return v
-        c += cnt
-      }
-      groups.last._1
+  def exactMedian(groups: Vector[(Double, Long, Long)]): Double =
+    exactMedian(groups.iterator.map(_._1).toArray, groups.iterator.map(_._2).toArray)
+
+  /** [[exactMedian]] over ascending distinct `values` with their row
+    * `counts`, in one walk.
+    */
+  def exactMedian(values: Array[Double], counts: Array[Long]): Double = {
+    var n = 0L
+    for (c <- counts) n += c
+    var i = 0; var seen = 0L
+    def valueAt(pos: Long): Double = { // 0-based order statistic, pos ascending
+      while (seen <= pos) { seen += counts(i); i += 1 }
+      values(i - 1)
     }
-    if (n % 2 == 1) valueAt(n / 2)
-    else {
-      val lo = valueAt(n / 2 - 1)
-      val hi = valueAt(n / 2)
-      (lo + hi) / 2.0
-    }
+    if (n == 0) Double.NaN
+    else if (n % 2 == 1) valueAt(n / 2)
+    else { val lo = valueAt(n / 2 - 1); (lo + valueAt(n / 2)) / 2.0 }
   }
 
   /** Full single-variable fit from exact sufficient stats — the

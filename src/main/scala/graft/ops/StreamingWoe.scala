@@ -17,10 +17,11 @@ import scala.collection.parallel.CollectionConverters._
   * the caller.
   *
   * The stream keeps the melt/aggregation (WoeBinning.statsAggregation
-  * / statsFromTuples); the batch fit computes the same stats in one
-  * narrow pass (graft.spark.FitStats) and shares the kernel dispatch
-  * (fitOne), so StreamingWoeSpec's streaming == batch equality
-  * cross-checks the two stats producers.
+  * / statsFromTuples), the only fit still on it; the batch producers
+  * (`fit`, `fitByGroup`, `exactMedians`) compute the same stats in one
+  * narrow pass (graft.spark.FitStats), and the batch fit shares the
+  * kernel dispatch (fitOne), so StreamingWoeSpec's streaming == batch
+  * equality cross-checks the two stats producers.
   *
   * Scale note: state is O(distinct (variable, value)) and each trigger
   * collects it, like the batch path.  For unbounded-cardinality

@@ -3,7 +3,9 @@ package graft.spark
 import graft.core.Kernels
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 /** One variable's non-missing values as sorted runs: ascending distinct
   * `values`, each with its row `counts` and its target sum `tsums` (the
@@ -117,13 +119,18 @@ private[graft] final class FitStats(
         missing(j) + r.counts.sum, missingTsum(j) + r.tsums.sum)
     }.toMap
   }
+
+  /** Each variable's exact median, keyed by `names`; NaN for none. */
+  def medians(names: Seq[String]): Map[String, Double] =
+    names.indices.map(j => names(j) -> Kernels.exactMedian(runs(j).values, runs(j).counts)).toMap
 }
 
 private[graft] object FitStats {
 
-  /** Rows buffered per block before they are sorted and folded into
-    * the partition's runs: a task holds O(BlockRows + partition
-    * distinct) values per variable, as the hash aggregate it replaces.
+  /** Rows a task buffers, over all its segments, before every segment's
+    * block is sorted and folded into its runs: a task holds
+    * O(BlockRows + segments × partition distinct) values per variable,
+    * as the hash aggregate it replaces.
     */
   val BlockRows: Int = 1 << 15
 
@@ -137,19 +144,62 @@ private[graft] object FitStats {
     * and a target outside {0, 1} or null is recorded for the driver to
     * reject, so that the error is not wrapped in a task failure.
     */
-  def of(df: DataFrame, targetCol: String, inputCols: Seq[String]): FitStats = {
+  def of(df: DataFrame, targetCol: String, inputCols: Seq[String]): FitStats =
+    pass(df, Some(targetCol), inputCols, None).getOrElse("", empty(inputCols.length))
+
+  /** [[of]] per non-null value of `groupCol` cast to string, in Java
+    * `String` order, from the same one job.
+    */
+  def bySegment(df: DataFrame, targetCol: String, inputCols: Seq[String],
+      groupCol: String): Seq[(String, FitStats)] =
+    pass(df, Some(targetCol), inputCols, Some(groupCol)).toSeq.sortBy(_._1)
+
+  /** Counts only, with no target: every target sum is 0. */
+  def counts(df: DataFrame, cols: Seq[String]): FitStats =
+    pass(df, None, cols, None).getOrElse("", empty(cols.length))
+
+  private def empty(k: Int) = new FitStats(Array.fill(k)(StatsRuns.empty),
+    new Array[Long](k), new Array[Long](k), 0L, None, None)
+
+  private def mergeInto(acc: Map[String, FitStats], seg: (String, FitStats)) =
+    acc.updated(seg._1, acc.get(seg._1).fold(seg._2)(_ merge seg._2))
+
+  /** The one pass over rows of (feature..., target?, segment?): per
+    * segment key, the stats of its rows (every row under `""` without a
+    * `groupCol`; rows of a null segment are skipped).  A task keeps one
+    * [[PartitionBuilder]] per segment; `treeReduce` merges key by key.
+    */
+  private def pass(df: DataFrame, targetCol: Option[String], inputCols: Seq[String],
+      groupCol: Option[String]): Map[String, FitStats] = {
     require(inputCols.nonEmpty, "woe_binning: no feature columns to fit")
     val names = inputCols.toArray
+    val seg = if (groupCol.isEmpty) -1 else names.length + targetCol.size
     val rows = df.selectExpr(
-      (inputCols :+ targetCol).map(c => s"cast(${WoeBinning.sqlId(c)} as double)"): _*)
+      (inputCols ++ targetCol).map(c => s"cast(${WoeBinning.sqlId(c)} as double)") ++
+        groupCol.map(g => s"cast(${WoeBinning.sqlId(g)} as string)"): _*)
       .queryExecution.toRdd
     val parts = rows.mapPartitions { it =>
-      val b = new PartitionBuilder(names)
-      while (it.hasNext) b.add(it.next())
-      Iterator.single(b.result())
+      val segments = new java.util.HashMap[UTF8String, PartitionBuilder]
+      var buffered = 0
+      while (it.hasNext) {
+        val row = it.next()
+        if (seg < 0 || !row.isNullAt(seg)) {
+          val key = if (seg < 0) UTF8String.EMPTY_UTF8 else row.getUTF8String(seg)
+          var b = segments.get(key)
+          if (b == null) {
+            b = new PartitionBuilder(names, targetCol.isDefined)
+            segments.put(key.copy(), b) // the row's bytes are reused
+          }
+          b.add(row)
+          buffered += 1
+          if (buffered == BlockRows) { segments.values.forEach(_.flush()); buffered = 0 }
+        }
+      }
+      // keys that differ in bytes but not as strings merge, as groupBy on the string would
+      Iterator.single(segments.asScala.iterator.map { case (g, b) => g.toString -> b.result() }
+        .foldLeft(Map.empty[String, FitStats])(mergeInto))
     }
-    if (parts.partitions.isEmpty) new PartitionBuilder(names).result()
-    else parts.treeReduce(_ merge _)
+    if (parts.partitions.isEmpty) Map.empty else parts.treeReduce(_.foldLeft(_)(mergeInto))
   }
 
   /** A growable primitive buffer, at most [[BlockRows]] long. */
@@ -160,10 +210,17 @@ private[graft] object FitStats {
       if (n == a.length) a = java.util.Arrays.copyOf(a, n * 2)
       a(n) = x; n += 1
     }
+    /** Empties it, shrinking one far larger than its last block. */
+    def clear(): Unit = {
+      if (a.length > 2 * n + 64) a = new Array[Double](n + 64)
+      n = 0
+    }
   }
 
-  /** One task's pass over rows of (feature..., target), all doubles. */
-  private final class PartitionBuilder(names: Array[String]) {
+  /** One segment's pass over a task's rows of (feature..., target?),
+    * all doubles; `hasTarget` false counts values only.
+    */
+  private final class PartitionBuilder(names: Array[String], hasTarget: Boolean) {
     private val k = names.length
     private val vals = Array.fill(k)(new DoubleBuf)
     private val ones = Array.fill(k)(new DoubleBuf)
@@ -185,10 +242,10 @@ private[graft] object FitStats {
     }
 
     def add(row: InternalRow): Unit = {
-      val one = !row.isNullAt(k) && row.getDouble(k) == 1.0
-      if (row.isNullAt(k)) {
+      val one = hasTarget && !row.isNullAt(k) && row.getDouble(k) == 1.0
+      if (hasTarget && row.isNullAt(k)) {
         if (nullTarget.isEmpty) nullTarget = Some(where(row))
-      } else if (!one && row.getDouble(k) != 0.0 && badTarget.isEmpty)
+      } else if (hasTarget && !one && row.getDouble(k) != 0.0 && badTarget.isEmpty)
         badTarget = Some(where(row)) // NaN and ±inf included
       var j = 0
       while (j < k) {
@@ -205,24 +262,23 @@ private[graft] object FitStats {
       }
       rows += 1
       blockRows += 1
-      if (blockRows == BlockRows) flush()
     }
 
-    private def flush(): Unit = {
+    def flush(): Unit = if (blockRows > 0) {
       var j = 0
       while (j < k) {
         var cur = StatsRuns.encode(vals(j).a, vals(j).n, ones(j).a, ones(j).n)
         val t = tiers(j)
         while (t.nonEmpty && t.last.size <= cur.size) cur = t.remove(t.length - 1).merge(cur)
         t += cur
-        vals(j).n = 0; ones(j).n = 0
+        vals(j).clear(); ones(j).clear()
         j += 1
       }
       blockRows = 0
     }
 
     def result(): FitStats = {
-      if (blockRows > 0) flush()
+      flush()
       new FitStats(
         tiers.map(_.reduceOption(_ merge _).getOrElse(StatsRuns.empty)),
         missing, missingTsum, rows, badTarget, nullTarget)

@@ -3,6 +3,7 @@ package graft.spark
 import graft.core._
 import graft.functions.{WoeChain, WoeLookup}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.parallel.CollectionConverters._
@@ -14,7 +15,7 @@ import scala.collection.parallel.CollectionConverters._
   * @param maxDistinct   scale knob with NO reference equivalent: when
   *                      set, values are first reduced to at most this
   *                      many quantile buckets (approx_percentile) before
-  *                      the groupBy, bounding the collected stats at
+  *                      the stats pass, bounding the collected stats at
   *                      100 TB scale.  OFF (= exact parity) by default.
   */
 final case class WoeFitOptions(
@@ -240,32 +241,15 @@ object WoeBinning {
       inputCols: Seq[String],
       opts: WoeFitOptions = WoeFitOptions()): WoeBinningModel = {
     requireDistinctInputs(inputCols)
-    val stats = sufficientStats(df, targetCol, inputCols, opts.maxDistinct)
-    val n = stats.valuesIterator.map(_.totalRows).maxOption.getOrElse(0L)
-    val nThr = opts.nThreshold.getOrElse(math.ceil(n.toDouble / 20.0))
-    val cfg = WoeConfig(nThr, opts.nOccurrences, opts.pThreshold,
-      opts.sortOverload, opts.mergeThreshold)
-    val fitted: Seq[(String, Vector[WoeBin])] =
-      inputCols.par
-        .map(c => c -> fitOne(c, targetCol, stats, cfg, opts.sepValue))
-        .seq.toVector
-    // the per-(variable, value) counts the fit just collected ARE the
-    // grouped stats `transform`'s exact medians need — precompute them
-    // driver-side (O(distinct), zero extra jobs) so a fit-then-apply on
-    // the SAME DataFrame (the dominant workflow) scans the data once.
-    // Skipped under maxDistinct: pre-binned values would yield snapped
-    // medians, not the apply dataset's true ones.
-    val fitMedians: Map[String, Double] =
-      if (opts.maxDistinct.isDefined) Map.empty
-      else stats.map { case (v, s) => v -> Kernels.exactMedian(s.groups) }
-    new WoeBinningModel(fitted, fitMedians,
+    val base = opts.maxDistinct.map(m => preBin(df, inputCols, m)).getOrElse(df)
+    buildModel(FitStats.of(base, targetCol, inputCols), targetCol, inputCols, opts,
       Some(df.queryExecution.analyzed))
   }
 
   /** Per-segment fit: an independent model per distinct value of
     * `groupCol`, all segments computed in ONE distributed stats pass.
     *
-    * Semantics contract (ByGroupSpec pins it): the model for segment
+    * Semantics contract (ApiSpec pins it): the model for segment
     * `g` equals `fit(df.filter(col(groupCol) === g), ...)` — including
     * the per-segment default `nThreshold = ceil(segmentRows / 20)`
     * (binning.py:84-87 applied to the segment, exactly what a user
@@ -273,12 +257,12 @@ object WoeBinning {
     * skipped, as no equality filter would select them.
     *
     * Scale: the reference user fits per-segment scorecards by running
-    * the whole pipeline once per segment — S full scans.  Here the melt
-    * is keyed by (segment, variable, value), so the single shuffle and
-    * single collect carry every segment at once; driver work stays
-    * O(segments × distinct values) and the kernels run in one parallel
-    * collection over (segment, variable) tasks.  `maxDistinct` prebins
-    * globally (same edges for every segment) before the stats pass.
+    * the whole pipeline once per segment — S full scans.  Here `fit`'s
+    * narrow pass keeps one set of runs per segment in each task
+    * ([[FitStats.bySegment]]): one job with no shuffle of the data
+    * carries every segment, and the collect and driver work stay
+    * O(segments × distinct values).  `maxDistinct` prebins globally
+    * (same edges for every segment) before the stats pass.
     */
   def fitByGroup(
       df: DataFrame,
@@ -288,53 +272,31 @@ object WoeBinning {
       opts: WoeFitOptions = WoeFitOptions()): Seq[(String, WoeBinningModel)] = {
     requireDistinctInputs(inputCols)
     val base = opts.maxDistinct.map(m => preBin(df, inputCols, m)).getOrElse(df)
-    val stackExpr = s"stack(${inputCols.length}, " +
-      inputCols.map(c => s"${sqlStr(c)}, cast(${sqlId(c)} as double)").mkString(", ") +
-      ") as (variable, value)"
-    import df.sparkSession.implicits._
-    val grouped = base
-      .selectExpr(s"cast(${sqlId(groupCol)} as string) as grp", stackExpr,
-        s"cast(${sqlId(targetCol)} as double) as traw")
-      .where(col("grp").isNotNull)
-      .withColumn("value", when(isnan(col("value")), lit(null)).otherwise(col("value")))
-      .groupBy("grp", "variable", "value")
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(when(col("traw") === 0.0 || col("traw") === 1.0, col("traw"))
-          .otherwise(lit(null)).cast("bigint")).as("tsum"),
-        count(col("traw")).as("tcnt"),
-        sum(when(isnan(col("traw")) ||
-            (col("traw") =!= 0.0 && col("traw") =!= 1.0), 1L)
-          .otherwise(0L)).as("tbad"))
-      // typed + unsorted: statsFromTuples sorts on the driver — the
-      // keyed range-sort exchange costs more than sorting the
-      // O(distinct) rows in memory
-      .as[(String, String, Option[Double], Long, Option[Long], Long, Long)]
-      .collect()
-    grouped.groupBy(_._1).toSeq.sortBy(_._1).map { case (g, rows) =>
-      // strip the segment key → the exact tuple shape statsFromTuples
-      // consumes; it sorts each variable's values itself
-      val stats = statsFromTuples(rows.map(t =>
-        (t._2, t._3, t._4, t._5, t._6, t._7)))
-      val n = stats.valuesIterator.map(_.totalRows).maxOption.getOrElse(0L)
-      val nThr = opts.nThreshold.getOrElse(math.ceil(n.toDouble / 20.0))
-      val cfg = WoeConfig(nThr, opts.nOccurrences, opts.pThreshold,
-        opts.sortOverload, opts.mergeThreshold)
-      val fitted: Seq[(String, Vector[WoeBin])] =
-        inputCols.par
-          .map(c => c -> fitOne(c, targetCol, stats, cfg, opts.sepValue))
-          .seq.toVector
-      val fitMedians: Map[String, Double] =
-        if (opts.maxDistinct.isDefined) Map.empty
-        else stats.map { case (v, s) => v -> Kernels.exactMedian(s.groups) }
+    FitStats.bySegment(base, targetCol, inputCols, groupCol).map { case (g, stats) =>
       // fit plan of the EQUIVALENT manual workflow: transform on
       // df.filter(groupCol === g) reuses the precomputed medians
       val gPlan =
         try Some(df.filter(col(groupCol).cast("string") === g)
           .queryExecution.analyzed)
         catch { case scala.util.control.NonFatal(_) => None }
-      g -> new WoeBinningModel(fitted, fitMedians, gPlan)
+      g -> buildModel(stats, targetCol, inputCols, opts, gPlan)
     }
+  }
+
+  /** The model of one frame's (or segment's) stats: the kernels with
+    * the default `nThreshold = ceil(rows / 20)` (binning.py:84-87), and
+    * the exact medians a `transform` of the fit frame reuses, from the
+    * same runs (no extra job).  None under maxDistinct: pre-binned
+    * values would yield snapped medians, not the data's true ones.
+    */
+  private def buildModel(stats: FitStats, targetCol: String, inputCols: Seq[String],
+      opts: WoeFitOptions, fitPlan: Option[LogicalPlan]): WoeBinningModel = {
+    val vs = stats.varStats(inputCols)
+    val cfg = WoeConfig(opts.nThreshold.getOrElse(math.ceil(stats.rows.toDouble / 20.0)),
+      opts.nOccurrences, opts.pThreshold, opts.sortOverload, opts.mergeThreshold)
+    val fitted = inputCols.par.map(c => c -> fitOne(c, targetCol, vs, cfg, opts.sepValue))
+    new WoeBinningModel(fitted.seq.toVector,
+      if (opts.maxDistinct.isDefined) Map.empty else stats.medians(inputCols), fitPlan)
   }
 
   /** Sentinel fit (`woe_binning_sep`, binning.py:32-75) WITHOUT extra
@@ -366,10 +328,9 @@ object WoeBinning {
   }
 
   /** Exact interpolated medians (pandas `Series.median`,
-    * binning.py:297/302) for several columns in ONE distributed job:
-    * melt → per-value counts (one shuffle) → unsorted typed collect →
-    * driver sort and interpolation over the grouped counts.  A column
-    * with no non-missing values maps to NaN.
+    * binning.py:297/302) for several columns from the counts-only form
+    * of `fit`'s stats pass ([[FitStats.counts]]): one job, no shuffle
+    * of the data.  A column with no non-missing values maps to NaN.
     *
     * The collect is O(distinct values).  `WoeBinningModel.transform`
     * no longer calls this for every new batch: its per-bin imputation
@@ -377,29 +338,8 @@ object WoeBinning {
     * collected extents, and falls back here only for the columns whose
     * middle pair could overflow (see [[WoeBinningModel.imputationValues]]).
     */
-  def exactMedians(df: DataFrame, cols: Seq[String]): Map[String, Double] = {
-    val stackExpr = s"stack(${cols.length}, " +
-      cols.map(c => s"${sqlStr(c)}, cast(${sqlId(c)} as double)").mkString(", ") +
-      ") as (variable, value)"
-    import df.sparkSession.implicits._
-    val grouped = df.selectExpr(stackExpr)
-      .where(col("value").isNotNull && !isnan(col("value")))
-      .groupBy("variable", "value")
-      .agg(count(lit(1)).as("cnt"))
-      // typed + unsorted collect + driver sort (as fitByGroup)
-      .as[(String, Double, Long)]
-      .collect()
-    val byVar = grouped.groupBy(_._1)
-    cols.map { c =>
-      c -> byVar.get(c).fold(Double.NaN) { rows =>
-        // exactMedian walks groups in ascending-value order; values are
-        // unique per variable after the groupBy so this sort is total
-        Kernels.exactMedian(
-          rows.iterator.map(t => (t._2, t._3, 0L))
-            .toVector.sortBy(_._1))
-      }
-    }.toMap
-  }
+  def exactMedians(df: DataFrame, cols: Seq[String]): Map[String, Double] =
+    FitStats.counts(df, cols).medians(cols)
 
   /** Reference 11-column schema (binning.py:107-108). */
   val binsSchema: StructType = StructType(Seq(
@@ -442,7 +382,7 @@ object WoeBinning {
 final class WoeBinningModel(
     val fitted: Seq[(String, Vector[WoeBin])],
     fitMedians: Map[String, Double] = Map.empty,
-    fitPlan: Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = None) {
+    fitPlan: Option[LogicalPlan] = None) {
 
   def bins(variable: String): Vector[WoeBin] =
     fitted.collectFirst { case (v, b) if v == variable => b }.getOrElse(

@@ -14,6 +14,8 @@ import graft.spark.{FitStats, WoeBinning, WoeFitOptions}
   * `WoeBinning.sufficientStats`) equals the grouped aggregation it
   * replaced, `statsFromTuples(statsAggregation(..).collect())`, bit for
   * bit: every value by `doubleToLongBits`, every count and every sum.
+  * Its per-segment form (`FitStats.bySegment`, which `fitByGroup`
+  * reads) equals the pass over each filtered segment the same way.
   *
   * Frames come from ScalaCheck generators run on fixed seeds; a failure
   * names its seed.  Cells mix −0.0 next to 0.0, NaN and null, ±inf,
@@ -55,12 +57,15 @@ class FitStatsSpec extends AnyFunSuite {
     reshape <- Gen.oneOf(AsIs, Repartitioned, Reordered)
   } yield Trial(types.zip(cells), target.toVector, partitions, shufflePartitions, reshape)
 
-  private def frame(t: Trial): DataFrame = {
+  /** The trial's frame; `extra` adds a column after the target. */
+  private def frame(t: Trial, extra: Option[(StructField, Vector[Any])] = None): DataFrame = {
     val names = t.cols.indices.map(i => s"c$i")
     val schema = StructType(names.zip(t.cols).map { case (n, (ty, _)) =>
-      StructField(n, ty.sqlType, nullable = true) } :+ StructField("target", IntegerType))
+      StructField(n, ty.sqlType, nullable = true) } ++ Seq(StructField("target", IntegerType)) ++
+      extra.map(_._1))
     val rows = t.target.indices.map(r =>
-      Row(t.cols.map { case (ty, c) => c(r).map(ty.cell).orNull } :+ t.target(r): _*))
+      Row(t.cols.map { case (ty, c) => c(r).map(ty.cell).orNull } ++ Seq(t.target(r)) ++
+        extra.map(_._2(r)): _*))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, t.partitions), schema)
     t.reshape match {
       case AsIs => df
@@ -148,6 +153,99 @@ class FitStatsSpec extends AnyFunSuite {
     }
   }
 
+  /** A generated frame plus a segment column `seg`: string keys with
+    * nulls (non-ASCII keys among them, where Java `String` order and
+    * UTF-8 byte order differ), a single key, or many int keys.
+    */
+  private val genSegmented: Gen[(Trial, SegKind, Vector[Option[Any]])] = for {
+    t <- genTrial
+    kind <- Gen.oneOf(WithNulls, Single, ManyInts)
+    segs <- Gen.listOfN(t.target.length, kind match {
+      case WithNulls => Gen.frequency(3 -> Gen.const(None),
+        7 -> Gen.oneOf("a", "B", "", "\u00e9", "\uffff", "\ud83d\ude00").map(Some(_)))
+      case Single => Gen.const(Some("s"))
+      case ManyInts => Gen.choose(-20, 20).map(Some(_))
+    })
+  } yield (t, kind, segs.toVector)
+
+  private def segmentedFrame(t: Trial, kind: SegKind, segs: Vector[Option[Any]]): DataFrame =
+    frame(t, Some(StructField("seg", if (kind == ManyInts) IntegerType else StringType) ->
+      segs.map(_.orNull)))
+
+  test("segmented pass == FitStats.of per filtered segment, bit for bit (generated frames)") {
+    var kinds = Set.empty[SegKind]
+    var orderSensitive = 0
+    for (seed <- 1L to 40L) {
+      val (t, kind, segs) = genSegmented.pureApply(Gen.Parameters.default, Seed(seed))
+      val cols = t.cols.indices.map(i => s"c$i")
+      withShufflePartitions(t.shufflePartitions) {
+        val df = segmentedFrame(t, kind, segs)
+        val got = FitStats.bySegment(df, "target", cols, "seg")
+        val want = segs.flatten.map(_.toString).distinct.sorted
+        assert(got.map(_._1) == want, s"seed $seed ($t, $kind): segment keys in String order")
+        got.foreach { case (g, s) =>
+          sameStats(s.varStats(cols),
+            WoeBinning.sufficientStats(df.filter(col("seg").cast("string") === g), "target", cols))
+            .foreach(msg => fail(s"seed $seed ($t, $kind), segment '$g': $msg"))
+        }
+        if (want.contains("\uffff") && want.contains("\ud83d\ude00")) orderSensitive += 1
+      }
+      kinds += kind
+    }
+    assert(kinds == Set(WithNulls, Single, ManyInts) && orderSensitive > 0, (kinds, orderSensitive))
+  }
+
+  test("segmented pass: many small segments that together exceed a block, in one task") {
+    // one partition of 2.2 blocks over 400 segments of skewed sizes
+    // (and null segments): every segment flushes when the task's
+    // buffered rows reach BlockRows, so each segment folds many blocks
+    val rows = FitStats.BlockRows * 11L / 5
+    val df = spark.range(0, rows, 1, 1).select(
+      when(col("id") % 97 === 0, lit(null))
+        .otherwise(floor(sqrt(pmod(col("id") * 7919, lit(160000L)))).cast("string")).as("seg"),
+      (col("id") % 13).cast("double").as("x"),
+      when(col("id") % 7 === 0, lit(Double.NaN)).otherwise(col("id") * 0.25).as("y"),
+      ((col("id") * 7919) % 11 < 4).cast("int").as("target"))
+    val got = FitStats.bySegment(df, "target", Seq("x", "y"), "seg")
+    assert(got.length > 300, got.length)
+    assert(got.map(_._1) == got.map(_._1).sorted)
+    // merged over every segment: the stats of all non-null-segment rows
+    sameStats(got.map(_._2).reduce(_ merge _).varStats(Seq("x", "y")),
+      WoeBinning.sufficientStats(df.filter(col("seg").isNotNull), "target", Seq("x", "y")))
+      .foreach(msg => fail(s"all segments merged: $msg"))
+    // the largest and smallest segments, and a spread between them
+    val bySize = got.sortBy(_._2.rows)
+    val sample = (bySize.take(3) ++ bySize.takeRight(3) ++ bySize.grouped(40).map(_.head)).distinct
+    sample.foreach { case (g, s) =>
+      sameStats(s.varStats(Seq("x", "y")),
+        WoeBinning.sufficientStats(df.filter(col("seg") === g), "target", Seq("x", "y")))
+        .foreach(msg => fail(s"segment '$g': $msg"))
+    }
+  }
+
+  test("fitByGroup target errors: thrown on the driver with the ungrouped texts, in segment order") {
+    def frameOf(rows: Seq[(String, Any)]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.zipWithIndex.map { case ((g, t), i) =>
+        Row(g, i.toDouble, t) }, 3),
+      StructType(Seq(StructField("seg", StringType), StructField("x", DoubleType),
+        StructField("target", DoubleType))))
+    def message(rows: Seq[(String, Any)]) = intercept[IllegalArgumentException] {
+      WoeBinning.fitByGroup(frameOf(rows), "target", Seq("x"), "seg")
+    }.getMessage
+    val bad = message(Seq("a" -> 0.0, "b" -> 1.0, "b" -> 2.0, "a" -> 1.0))
+    assert(bad == "woe_binning: target must be 0/1 (variable 'x', value 2.0)", bad)
+    val nulls = message(Seq("a" -> 0.0, "b" -> 1.0, "a" -> null, "b" -> 0.0))
+    assert(nulls == "woe_binning: target contains nulls (variable 'x', value 2.0)", nulls)
+    // segment "a" comes first, so its null target is reported before b's bad one
+    val first = message(Seq("b" -> 3.0, "a" -> 1.0, "a" -> null, "b" -> 0.0))
+    assert(first == "woe_binning: target contains nulls (variable 'x', value 2.0)", first)
+    // a row of a null segment is skipped, its target included
+    val kept = WoeBinning.fitByGroup(frameOf(Seq("a" -> 0.0, "a" -> 1.0, (null, null),
+      (null, 5.0), "a" -> 1.0, "a" -> 0.0)), "target", Seq("x"), "seg",
+      WoeFitOptions(nThreshold = Some(1)))
+    assert(kept.map(_._1) == Seq("a"))
+  }
+
   test("target errors: a bad target wins over a null one; both name a variable and a value") {
     def frameOf(targets: Seq[Any]) = spark.createDataFrame(
       spark.sparkContext.parallelize(targets.zipWithIndex.map { case (t, i) =>
@@ -190,6 +288,11 @@ object FitStatsSpec {
     val sqlType = StringType
     def cell(x: Double): Any = x.toString // "NaN", "-0.0", "Infinity", "1.7976931348623157E308"
   }
+
+  sealed trait SegKind
+  case object WithNulls extends SegKind
+  case object Single extends SegKind
+  case object ManyInts extends SegKind
 
   sealed trait Reshape
   case object AsIs extends Reshape

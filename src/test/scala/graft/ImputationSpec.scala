@@ -2,10 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, count, isnan, lit}
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.core.WoeBin
+import graft.core.{Kernels, WoeBin}
 import graft.spark.{WoeBinning, WoeBinningModel, WoeFitOptions}
 
 /** `WoeBinningModel.transform` on a frame that is not the fit frame
@@ -13,7 +14,8 @@ import graft.spark.{WoeBinning, WoeBinningModel, WoeFitOptions}
   * output must equal, cell for cell and bit for bit, the reference
   * semantics: `coalesce(value, exact median of the apply frame)`
   * through the same chain (`transformExactMedians`, with
-  * `WoeBinning.exactMedians` as the oracle).
+  * `WoeBinning.exactMedians` as the oracle, itself checked against the
+  * melt it replaced, `meltMedians`).
   *
   * Frames come from ScalaCheck generators run on fixed seeds; a
   * failure names its seed.  Values mix nulls, NaN, cut points and their
@@ -118,6 +120,39 @@ class ImputationSpec extends AnyFunSuite {
     assert(cov.sentinel == 30, cov)
   }
 
+  test("exactMedians == the melt medians it replaced, bit for bit (generated frames)") {
+    var cov = MedianCoverage()
+    for (seed <- 1L to 80L) {
+      val t = genHandBuilt.pureApply(Gen.Parameters.default, Seed(seed))
+      val names = t.model.fitted.map(_._1)
+      val got = WoeBinning.exactMedians(t.df, names)
+      val want = meltMedians(t.df, names)
+      assert(got.keySet == want.keySet, s"seed $seed")
+      names.foreach { v =>
+        assert(java.lang.Double.doubleToLongBits(got(v)) ==
+          java.lang.Double.doubleToLongBits(want(v)),
+          s"seed $seed, $v (partitions ${t.partitions}): ${got(v)} vs melt ${want(v)}")
+      }
+      val present = t.cols.map(_.flatten.filterNot(_.isNaN))
+      cov = cov.copy(
+        negZero = cov.negZero + present.count(_.exists(x =>
+          java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(-0.0))),
+        nan = cov.nan + t.cols.count(_.exists(_.exists(_.isNaN))),
+        nulls = cov.nulls + t.cols.count(_.contains(None)),
+        infinite = cov.infinite + present.count(_.exists(_.isInfinite)),
+        huge = cov.huge + present.count(_.exists(x => !x.isInfinite && math.abs(x) > Double.MaxValue / 2)),
+        allMissing = cov.allMissing + present.count(_.isEmpty),
+        oddEven = cov.oddEven ++ present.filter(_.nonEmpty).map(_.length % 2))
+    }
+    info(cov.toString)
+    assert(cov.negZero > 0 && cov.nan > 0 && cov.nulls > 0, cov)
+    assert(cov.infinite > 0 && cov.huge > 0 && cov.allMissing > 0 && cov.oddEven == Set(0, 1), cov)
+    // an empty frame has no values: NaN, as the melt gives
+    val empty = frame(Seq("x", "y"), Seq(Vector.empty, Vector.empty), 3)
+    for (m <- Seq(WoeBinning.exactMedians(empty, Seq("x", "y")), meltMedians(empty, Seq("x", "y"))))
+      assert(m.keySet == Set("x", "y") && m.values.forall(_.isNaN), m)
+  }
+
   test("imputation value: both middle ranks in one leaf near Double.MaxValue") {
     // the middle pair of one leaf can overflow: MaxValue + MaxValue is
     // +inf, and -inf + +inf is NaN, so the exact median of a one-leaf
@@ -143,6 +178,39 @@ class ImputationSpec extends AnyFunSuite {
 }
 
 object ImputationSpec {
+  /** The melt `WoeBinning.exactMedians` ran before it read the fit's
+    * stats pass, kept as its oracle: `stack` → per-(variable, value)
+    * counts (one shuffle) → unsorted typed collect → driver sort and
+    * `Kernels.exactMedian` over the grouped counts.
+    */
+  def meltMedians(df: DataFrame, cols: Seq[String]): Map[String, Double] = {
+    val stackExpr = s"stack(${cols.length}, " +
+      cols.map(c => s"'$c', cast(`$c` as double)").mkString(", ") +
+      ") as (variable, value)"
+    import df.sparkSession.implicits._
+    val grouped = df.selectExpr(stackExpr)
+      .where(col("value").isNotNull && !isnan(col("value")))
+      .groupBy("variable", "value")
+      .agg(count(lit(1)).as("cnt"))
+      .as[(String, Double, Long)]
+      .collect()
+    val byVar = grouped.groupBy(_._1)
+    cols.map { c =>
+      c -> byVar.get(c).fold(Double.NaN) { rows =>
+        Kernels.exactMedian(rows.iterator.map(t => (t._2, t._3, 0L)).toVector.sortBy(_._1))
+      }
+    }.toMap
+  }
+
+  final case class MedianCoverage(
+      negZero: Int = 0,
+      nan: Int = 0,
+      nulls: Int = 0,
+      infinite: Int = 0,
+      huge: Int = 0,
+      allMissing: Int = 0,
+      oddEven: Set[Int] = Set.empty)
+
   /** Generators and helpers shared with `WoeLookupSpec`. */
   val Huge = Seq(Double.MaxValue, -Double.MaxValue, Double.MaxValue * 0.75,
     -Double.MaxValue * 0.75, Math.nextUp(Double.MaxValue / 2), Double.MaxValue / 4)

@@ -151,6 +151,33 @@ class KernelSpec extends AnyFunSuite {
     assert(Kernels.exactMedian(Vector((1.0, 1L, 0L), (3.0, 1L, 0L))) == 2.0)
     assert(Kernels.exactMedian(Vector((1.0, 2L, 0L), (3.0, 1L, 0L))) == 1.0)
     assert(Kernels.exactMedian(Vector((1.0, 1L, 0L), (2.0, 1L, 0L), (3.0, 1L, 0L))) == 2.0)
+    // the same cases in the array form the fit reads its runs through
+    assert(Kernels.exactMedian(Array(1.0, 3.0), Array(1L, 1L)) == 2.0)
+    assert(Kernels.exactMedian(Array(1.0, 3.0), Array(2L, 1L)) == 1.0)
+    assert(Kernels.exactMedian(Array(1.0, 2.0, 3.0), Array(1L, 1L, 1L)) == 2.0)
+    assert(Kernels.exactMedian(Array.emptyDoubleArray, Array.emptyLongArray).isNaN)
+    assert(Kernels.exactMedian(Vector.empty).isNaN)
+  }
+
+  test("exactMedian: array form == median of the expanded rows, bit for bit (seeded)") {
+    val pool = Array(Double.NegativeInfinity, -Double.MaxValue, -2.5, -1.0, 0.0,
+      Double.MinPositiveValue, 1.0, 3.0, Double.MaxValue / 2, Math.nextUp(Double.MaxValue / 2),
+      Double.MaxValue, Double.PositiveInfinity)
+    val rnd = new scala.util.Random(29)
+    for (trial <- 1 to 2000) {
+      val values = pool.filter(_ => rnd.nextInt(3) == 0)
+      val counts = values.map(_ => 1L + rnd.nextInt(if (rnd.nextBoolean()) 3 else 40))
+      val rows = values.zip(counts).flatMap { case (v, c) => Array.fill(c.toInt)(v) }
+      val n = rows.length
+      val want = if (n == 0) Double.NaN else if (n % 2 == 1) rows(n / 2)
+        else (rows(n / 2 - 1) + rows(n / 2)) / 2.0
+      val got = Kernels.exactMedian(values, counts)
+      val groups = Kernels.exactMedian(values.zip(counts).map { case (v, c) => (v, c, 0L) }.toVector)
+      assert(java.lang.Double.doubleToLongBits(got) == java.lang.Double.doubleToLongBits(want),
+        s"trial $trial: ${values.zip(counts).mkString(", ")} -> $got, want $want")
+      assert(java.lang.Double.doubleToLongBits(groups) == java.lang.Double.doubleToLongBits(want),
+        s"trial $trial (groups): $groups, want $want")
+    }
   }
 
   test("fitVariable property: sizes sum to non-null rows; dists sum to 1 (finite case)") {

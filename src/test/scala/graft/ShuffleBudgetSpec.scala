@@ -178,6 +178,42 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       s"${cost.shuffleBytes} treeReduce shuffle bytes ($distinct distinct values)")
   }
 
+  test("fitByGroup: one narrow stats job, collect bounded by segments × distinct values") {
+    // every segment's runs come from the fit's one pass: each task keeps
+    // per-segment runs and treeReduce merges them segment by segment,
+    // with no melt and no groupBy exchange
+    val cols = Seq("quantity", "discount") // about 50 and 11 distinct values
+    val base = spark.read.parquet(s"$sf01/lineitem.parquet")
+      .select(SparkEntry.lcgColumns :+ concat(col("l_returnflag"), col("l_linestatus")).as("seg"): _*)
+    val (segments, distinct) = {
+      val d = base.agg(countDistinct("seg"), countDistinct("quantity"),
+        countDistinct("discount")).head()
+      (d.getLong(0), d.getLong(1) + d.getLong(2))
+    }
+    for (p <- Seq(1, 4)) {
+      val df = base.repartition(p).cache()
+      df.count() // the repartition shuffle happens outside the meter
+      val cost =
+        try jobCost {
+          graft.spark.WoeBinning.fitByGroup(df, "target", cols, "seg",
+            graft.spark.WoeFitOptions(nThreshold = Some(300)))
+          ()
+        } finally df.unpersist()
+      // each task returns at most every segment's distinct values (24
+      // bytes: value, count, Σtarget), about 1 kB of framing per
+      // segment, and its metrics (about 2-4 kB).  A per-row collect
+      // would be at least 8 bytes for each of 600k rows
+      val bound = p * (segments * (24L * distinct + 1024L) + 8192L)
+      assert(cost.jobs == 1, s"$p partitions: ${cost.jobs} jobs")
+      assert(cost.shuffleBytes == 0L, s"$p partitions: fitByGroup shuffled ${cost.shuffleBytes} bytes")
+      assert(cost.resultBytes > 0L && cost.resultBytes < bound,
+        s"$p partitions: collected ${cost.resultBytes} bytes, bound $bound " +
+          s"($segments segments, $distinct distinct values)")
+      info(s"$p partitions: ${cost.resultBytes} task-result bytes, bound $bound " +
+        s"($segments segments, $distinct distinct values)")
+    }
+  }
+
   test("transform (apply) is shuffle-free") {
     val df = TestSpark.lcgFrame(sf01)
     val model = graft.spark.WoeBinning.fit(df, "target", Seq("extendedprice"),
