@@ -30,30 +30,20 @@ object Profile {
     // ---- fit phases
     val df = SparkEntry.lcgFrame(spark, sfDir).cache()
     time("lcgFrame count (cache)")(df.count())
-    val stats = time("sufficientStats") {
-      graft.spark.WoeBinning.sufficientStats(df, "target", Seq("extendedprice"))
+    // the fit's one narrow stats job, the driver's per-variable view of
+    // its runs, then the MOB kernels over them
+    val fs = time("FitStats pass (one job)") {
+      graft.spark.FitStats.of(df, "target", Seq("extendedprice"))
     }
-    val s = stats("extendedprice")
-    println(s"[profile] distinct groups: ${s.groups.length}")
+    val s = time("  FitStats.varStats driver")(fs.varStats(Seq("extendedprice")))("extendedprice")
+    println(s"[profile] distinct values: ${s.size}")
     val cfgDefault = graft.core.WoeConfig(nThreshold = math.ceil(s.totalRows / 20.0))
     val cfg300 = graft.core.WoeConfig(nThreshold = 300)
-    Seq(("kernels nThr=default(N/20)", cfgDefault), ("kernels nThr=300", cfg300))
-      .foreach { case (label, cfg) =>
-        time(label) {
-          val asc = graft.core.Kernels.detectOrder(s)
-          val gs = s.groups.map { case (v, cnt, t) =>
-            graft.core.GroupStat(v, cnt.toDouble, t.toDouble / cnt,
-              graft.core.Kernels.binaryStd(cnt, t))
-          }
-          val sorted = if (asc) gs else gs.reverse
-          val pooled = time(s"  monotonePool")(graft.core.Kernels.monotonePool(sorted))
-          println(s"[profile]   pooled groups: ${pooled.length}")
-          time(s"  significanceMerge") {
-            graft.core.Kernels.significanceMerge(pooled, cfg.nThreshold,
-              cfg.nOccurrences, cfg.pThreshold)
-          }.length
-        }
-      }
+    Seq(("Kernels.fitVariable nThr=default(N/20)", cfgDefault),
+        ("Kernels.fitVariable nThr=300", cfg300)).foreach { case (label, cfg) =>
+      val bins = time(label)(graft.core.Kernels.fitVariable(s, cfg))
+      println(s"[profile]   bins: ${bins.length}")
+    }
 
     // ---- minhash stages
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").cache()
@@ -131,14 +121,6 @@ object Profile {
     }
     time("transform + aggregate, new batch")(scoreBatch())
     time("  transform + aggregate, 2nd pass")(scoreBatch())
-    // stats sub-stages: the fit's one narrow stats job vs the driver's
-    // build of the kernels' per-variable stats
-    locally {
-      val fs = time("  FitStats pass (one job)") {
-        graft.spark.FitStats.of(df, "target", Seq("extendedprice"))
-      }
-      time("  FitStats.varStats driver")(fs.varStats(Seq("extendedprice")))
-    }
 
     // ---- streaming fit (needs the testdata file layout — a ScaleUp
     // scratch dir has no stageable single-file table, so don't abort

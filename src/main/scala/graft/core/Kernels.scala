@@ -39,13 +39,15 @@ final case class WoeConfig(
 /** Pure, driver-side kernels of the Monotone Optimal Binning algorithm.
   *
   * These are the irreducibly iterative parts of the reference
-  * (binning.py:133-263) re-expressed as pure Scala functions over small
-  * collected vectors (bounded by the distinct-value count of one
-  * feature).  The distributed work — the one groupBy that produces the
-  * sufficient statistics — lives in [[graft.spark.WoeBinning]]; by the
-  * time these kernels run, all inputs are exact integers (counts and
-  * 0/1-target sums), so the float64 arithmetic below is bit-for-bit
-  * deterministic and mirrors the reference's operation order.
+  * (binning.py:133-263) re-expressed as pure Scala functions over one
+  * variable's collected statistics: primitive arrays of its distinct
+  * values with their counts and target sums ([[Kernels.VarStats]]),
+  * bounded by the distinct-value count of one feature.  The distributed
+  * work — the one narrow stats pass that produces those arrays — lives
+  * in [[graft.spark.FitStats]]; by the time these kernels run, all
+  * inputs are exact integers (counts and 0/1-target sums), so the
+  * float64 arithmetic below is bit-for-bit deterministic and mirrors the
+  * reference's operation order.
   *
   * Reference quirks intentionally preserved (SURVEY.md §2.13):
   *  - the +2 double penalty on constraint-violating bins (binning.py:201,203-207)
@@ -84,55 +86,62 @@ object Kernels {
     }
 
   /** Phase 1 — monotone pooling to a strictly-decreasing bad-rate
-    * sequence (binning.py:133-178).  Input must already be in fit sort
-    * order (ascending or descending per orientation).  Faithful
-    * re-expression of the nested `while` loops, including the exact
-    * pooled-std formulas and the n==2 special case.
+    * sequence (binning.py:133-178), in place over the groups' `value`,
+    * `size`, `mean` and `std` arrays (equal lengths, already in fit sort
+    * order, ascending or descending per orientation).  Returns the number
+    * of pooled groups, which then fill the arrays' first slots; a pooled
+    * group keeps its first group's value.  Faithful re-expression of the
+    * nested `while` loops, including the exact pooled-std formulas and the
+    * n==2 special case.
     */
-  def monotonePool(groups: Vector[GroupStat]): Vector[GroupStat] = {
-    var cur: Array[GroupStat] = groups.toArray
-    var del: Array[Boolean] = new Array[Boolean](cur.length)
+  def monotonePool(value: Array[Double], size: Array[Double], mean: Array[Double],
+      std: Array[Double]): Int = {
+    var len = value.length
+    val del = new Array[Boolean](len)
     while (true) {
-      // compaction at the top of the outer loop (binning.py:136-137)
-      val arr = {
-        val b = Array.newBuilder[GroupStat]
-        var t = 0
-        while (t < cur.length) { if (!del(t)) b += cur(t); t += 1 }
-        b.result()
-      }
-      val dflags = new Array[Boolean](arr.length)
-      val len = arr.length
+      var pooled = false
       var i = 0
       var outerBreak = false
       while (!outerBreak) {
         var j = i + 1
         if (j >= len) outerBreak = true
-        else if (arr(j).mean < arr(i).mean) {
+        else if (mean(j) < mean(i)) {
           i += 1 // strictly decreasing → advance (binning.py:146-148)
         } else {
           // pooling loop (binning.py:150-172)
           var pooling = true
           while (pooling) {
-            val gi = arr(i); val gj = arr(j)
-            val n = gj.size + gi.size
-            val m = (gj.size * gj.mean + gi.size * gi.mean) / n
+            val n = size(j) + size(i)
+            val m = (size(j) * mean(j) + size(i) * mean(i)) / n
             val s =
-              if (n == 2.0) popStdOf2(gj.mean, gi.mean)
-              else math.sqrt((gj.size * gj.std * gj.std + gi.size * gi.std * gi.std) / n)
-            arr(i) = gi.copy(size = n, mean = m, std = s)
-            dflags(j) = true
+              if (n == 2.0) popStdOf2(mean(j), mean(i))
+              else math.sqrt((size(j) * std(j) * std(j) + size(i) * std(i) * std(i)) / n)
+            size(i) = n; mean(i) = m; std(i) = s
+            del(j) = true
+            pooled = true
             j += 1
             if (j >= len) pooling = false
-            else if (arr(j).mean < arr(i).mean) { i = j; pooling = false }
+            else if (mean(j) < mean(i)) { i = j; pooling = false }
           }
           if (j >= len) outerBreak = true
         }
       }
-      cur = arr
-      del = dflags
-      if (!dflags.exists(identity)) return arr.toVector
+      if (!pooled) return len
+      // the compaction the reference runs at the top of its next pass
+      // (binning.py:136-137)
+      var w = 0
+      var t = 0
+      while (t < len) {
+        if (!del(t)) {
+          value(w) = value(t); size(w) = size(t); mean(w) = mean(t); std(w) = std(t)
+          w += 1
+        }
+        del(t) = false
+        t += 1
+      }
+      len = w
     }
-    Vector.empty // unreachable
+    len // unreachable
   }
 
   /** Phase 2 — iterative z-test merging (binning.py:180-224).
@@ -323,20 +332,44 @@ object Kernels {
   }
 
   /** Exact sufficient statistics for one variable, all integers except
-    * the group keys — collected from the one distributed groupBy.
-    * `groups` must be sorted ascending by value.
+    * the values: its ascending distinct non-missing `values` with their
+    * row `counts` and target sums `tsums` (the stats pass's run arrays,
+    * shared, not copied), and its missing bucket.
     */
-  final case class VarStats(
-      variable: String,
-      groups: Vector[(Double, Long, Long)], // (value, count, targetSum) asc
-      nanCount: Long,
-      nanTsum: Long,
-      totalRows: Long, // includes NaN-feature rows
-      totalTsum: Long)
+  final class VarStats(
+      val variable: String,
+      val values: Array[Double],
+      val counts: Array[Long],
+      val tsums: Array[Long],
+      val nanCount: Long,
+      val nanTsum: Long) {
+    require(counts.length == values.length && tsums.length == values.length,
+      s"VarStats($variable): values, counts and tsums differ in length")
+
+    /** Rows, missing ones included. */
+    val totalRows: Long = nanCount + total(counts)
+    val totalTsum: Long = nanTsum + total(tsums)
+
+    /** Distinct non-missing values. */
+    def size: Int = values.length
+
+    /** The runs as ascending (value, count, targetSum) tuples, a boxed
+      * copy for callers that read tuples; the kernels read the arrays.
+      */
+    def groups: Vector[(Double, Long, Long)] =
+      Vector.tabulate(size)(i => (values(i), counts(i), tsums(i)))
+  }
+
+  private def total(a: Array[Long]): Long = {
+    var t = 0L
+    var i = 0
+    while (i < a.length) { t += a(i); i += 1 }
+    t
+  }
 
   /** Orientation detection (binning.py:114-119): compare the target sum
     * of the first quarter of the feature-sorted rows (NaN last) with
-    * the last quarter.  Computed from grouped stats; when the quarter
+    * the last quarter.  Walks the runs in value order; when the quarter
     * boundary splits a value group the partial contribution is the
     * group mean × rows taken (fractional).  pandas takes whichever rows
     * its unstable sort put there — empirically this fractional rule
@@ -363,10 +396,11 @@ object Kernels {
         dev = math.max(est - lo, hi - est)
         taken = k
       }
-      val it = s.groups.iterator
+      var g = 0
       var doneG = false
-      while (!doneG && it.hasNext) {
-        val (_, cnt, tsum) = it.next()
+      while (!doneG && g < s.size) {
+        val cnt = s.counts(g); val tsum = s.tsums(g)
+        g += 1
         if (taken + cnt <= k) { sum += tsum.toDouble; taken += cnt }
         else { partial(cnt, tsum); doneG = true }
         if (taken == k) doneG = true
@@ -426,13 +460,27 @@ object Kernels {
       case Some(true) => true
       case _ => order
     }
-    val statsAsc = s.groups.map { case (v, cnt, tsum) =>
-      GroupStat(v, cnt.toDouble, tsum.toDouble / cnt.toDouble, binaryStd(cnt, tsum))
+    // the groups in fit order: index p reads run p ascending, or the
+    // run p from the top descending
+    val k = s.size
+    val value = new Array[Double](k)
+    val size = new Array[Double](k)
+    val mean = new Array[Double](k)
+    val std = new Array[Double](k)
+    var p = 0
+    while (p < k) {
+      val i = if (ascending) p else k - 1 - p
+      val cnt = s.counts(i); val tsum = s.tsums(i)
+      value(p) = s.values(i)
+      size(p) = cnt.toDouble
+      mean(p) = tsum.toDouble / cnt.toDouble
+      std(p) = binaryStd(cnt, tsum)
+      p += 1
     }
-    val sorted = if (ascending) statsAsc else statsAsc.reverse
-    val pooled = monotonePool(sorted)
-    val mergedGroups =
-      significanceMerge(pooled, cfg.nThreshold, cfg.nOccurrences, cfg.pThreshold)
+    val pooled = monotonePool(value, size, mean, std)
+    val mergedGroups = significanceMerge(
+      Vector.tabulate(pooled)(g => GroupStat(value(g), size(g), mean(g), std(g))),
+      cfg.nThreshold, cfg.nOccurrences, cfg.pThreshold)
     var bins = assembleIntervals(s.variable, mergedGroups, intervalEnd)
     if (s.nanCount > 0) {
       val nanMean = s.nanTsum.toDouble / s.nanCount.toDouble

@@ -35,13 +35,16 @@ final case class WoeFitOptions(
   *
   * The pass reads the feature columns and the target cast to double
   * over `queryExecution.toRdd`.  Each task buffers a fixed block of rows
-  * in primitive arrays, sorts and run-length encodes them into sorted
-  * (value, count, Σtarget) runs plus a missing bucket, and folds each
-  * block into its runs with a sorted merge that adds the counts of equal
-  * values; `treeReduce` merges the tasks' runs the same way.  There is no
-  * melt and no shuffle of the data, and the driver decodes no rows.  A
-  * task returns O(partition distinct) values per variable, so the
-  * collect is bounded by distinct values, not rows.
+  * in primitive arrays, each value with its row's target bit.  One LSD
+  * radix sort per variable and block, over order-preserving 64-bit keys
+  * and carrying the target bit, orders the block; a run-length pass
+  * turns it into sorted (value, count, Σtarget) runs plus a missing
+  * bucket.  Each block folds into the task's runs with a sorted merge
+  * that adds the counts of equal values; `treeReduce` merges the tasks'
+  * runs the same way.  There is no melt and no shuffle of the data, and
+  * the driver decodes no rows: the kernels read each variable's run
+  * arrays as they arrive.  A task returns O(partition distinct) values
+  * per variable, so the collect is bounded by distinct values, not rows.
   *
   * This replaces the reference's per-column process fan-out that
   * pickles the full column to each worker (binning.py:82,89-99) and its
@@ -115,10 +118,9 @@ object WoeBinning {
       // callers that ordered upstream) skips the O(n log n) driver sort;
       // the engine's own collects arrive unsorted by design (r18: the
       // range-sort exchange cost more than this in-memory sort)
-      val groupsB = Vector.newBuilder[(Double, Long, Long)]
+      val groupsB = Array.newBuilder[(Double, Long, Long)]
       groupsB.sizeHint(vr.length)
       var nanCount = 0L; var nanTsum = 0L
-      var valCnt = 0L; var valTsum = 0L
       var presorted = true; var prev = Double.NegativeInfinity
       var i = 0
       while (i < vr.length) {
@@ -138,42 +140,24 @@ object WoeBinning {
           if (v < prev) presorted = false
           prev = v
           groupsB += ((v, r._3, r._4.get))
-          valCnt += r._3; valTsum += r._4.get
         }
         i += 1
       }
-      val built = groupsB.result()
       // fallback sort tuned for the near-unique case (r18): 583k
       // boxed-tuple `sortBy` cost ~0.5 s at sf0.1; Arrays.sort with a
       // direct primitive-field comparator over the one materialized
       // array cuts the constant (values are unique per variable after
       // the groupBy, so the order — hence the fit — is identical)
-      val groups =
-        if (presorted) built
-        else {
-          val arr = built.toArray
-          java.util.Arrays.sort(arr,
-            new java.util.Comparator[(Double, Long, Long)] {
-              def compare(a: (Double, Long, Long), b: (Double, Long, Long)): Int =
-                java.lang.Double.compare(a._1, b._1)
-            })
-          arr.toVector
-        }
-      variable -> Kernels.VarStats(variable, groups, nanCount, nanTsum,
-        nanCount + valCnt, nanTsum + valTsum)
+      val groups = groupsB.result()
+      if (!presorted)
+        java.util.Arrays.sort(groups,
+          new java.util.Comparator[(Double, Long, Long)] {
+            def compare(a: (Double, Long, Long), b: (Double, Long, Long)): Int =
+              java.lang.Double.compare(a._1, b._1)
+          })
+      variable -> new Kernels.VarStats(variable, groups.map(_._1), groups.map(_._2),
+        groups.map(_._3), nanCount, nanTsum)
     }
-
-  /** Exact stats for every variable from one narrow job
-    * ([[FitStats.of]]); `maxDistinct` pre-bins first ([[preBin]]).
-    */
-  def sufficientStats(
-      df: DataFrame,
-      targetCol: String,
-      inputCols: Seq[String],
-      maxDistinct: Option[Int] = None): Map[String, Kernels.VarStats] = {
-    val base = maxDistinct.map(m => preBin(df, inputCols, m)).getOrElse(df)
-    FitStats.of(base, targetCol, inputCols).varStats(inputCols)
-  }
 
   /** One variable's bins from its collected stats — the per-variable
     * kernel dispatch shared by the batch and streaming fits (guards
@@ -187,9 +171,9 @@ object WoeBinning {
       sepValue: Option[Double]): Vector[WoeBin] =
     if (variable == targetCol) Kernels.degenerateBins(variable) // binning.py:106-109
     else {
-      val s = stats.getOrElse(variable,
-        Kernels.VarStats(variable, Vector.empty, 0, 0, 0, 0))
-      require(s.groups.nonEmpty || s.nanCount > 0,
+      val s = stats.getOrElse(variable, new Kernels.VarStats(variable,
+        Array.emptyDoubleArray, Array.emptyLongArray, Array.emptyLongArray, 0, 0))
+      require(s.size > 0 || s.nanCount > 0,
         s"woe_binning: column '$variable' has no rows")
       sepValue match {
         case None => Kernels.fitVariable(s, cfg)
@@ -301,27 +285,27 @@ object WoeBinning {
 
   /** Sentinel fit (`woe_binning_sep`, binning.py:32-75) WITHOUT extra
     * scans: the sep-subset and complement sufficient stats are split
-    * out of the already-collected grouped stats.
+    * out of the already-collected runs, at the one run (values are
+    * distinct) whose value equals `sep`.
     */
   private def fitSentinel(
       s: Kernels.VarStats,
       sep: Double,
       cfg: WoeConfig): Vector[WoeBin] = {
-    val (sepGroups, rest) = s.groups.partition(_._1 == sep)
+    val at = s.values.indexWhere(_ == sep)
     // the reference crashes opaquely on these (binning.py:37, 49); fail
     // fast — the complement needs at least one NON-null value (a
     // complement of only-null rows yields a lone NaN bin, which the
     // stitch strips before indexing b(0))
-    require(sepGroups.nonEmpty,
+    require(at >= 0,
       s"woe_binning_sep: no rows of '${s.variable}' equal sep_value=$sep")
-    require(rest.nonEmpty,
+    require(s.size > 1,
       s"woe_binning_sep: no non-null rows of '${s.variable}' differ from sep_value=$sep — nothing to bin")
-    val sepStats = Kernels.VarStats(s.variable, sepGroups, 0L, 0L,
-      sepGroups.iterator.map(_._2).sum, sepGroups.iterator.map(_._3).sum)
+    val sepStats = new Kernels.VarStats(s.variable, Array(s.values(at)), Array(s.counts(at)),
+      Array(s.tsums(at)), 0L, 0L)
     // pandas `!=` keeps NaN rows in the complement (binning.py:43)
-    val compStats = Kernels.VarStats(s.variable, rest, s.nanCount, s.nanTsum,
-      s.nanCount + rest.iterator.map(_._2).sum,
-      s.nanTsum + rest.iterator.map(_._3).sum)
+    val compStats = new Kernels.VarStats(s.variable, s.values.patch(at, Nil, 1),
+      s.counts.patch(at, Nil, 1), s.tsums.patch(at, Nil, 1), s.nanCount, s.nanTsum)
     val a = Kernels.fitVariable(sepStats, cfg)
     val b = Kernels.fitVariable(compStats, cfg)
     Kernels.stitchSentinel(a, b, sep, s.totalTsum.toDouble, s.totalRows.toDouble)

@@ -8,14 +8,16 @@ import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.core.{Kernels, WoeBin, WoeConfig}
-import graft.spark.{FitStats, WoeBinning, WoeFitOptions}
+import graft.spark.{FitStats, StatsRuns, WoeBinning, WoeFitOptions}
 
-/** The fit's narrow stats pass (`FitStats`, through
-  * `WoeBinning.sufficientStats`) equals the grouped aggregation it
-  * replaced, `statsFromTuples(statsAggregation(..).collect())`, bit for
-  * bit: every value by `doubleToLongBits`, every count and every sum.
-  * Its per-segment form (`FitStats.bySegment`, which `fitByGroup`
-  * reads) equals the pass over each filtered segment the same way.
+/** The fit's narrow stats pass (`FitStats.of(..).varStats(..)`) equals
+  * the grouped aggregation it replaced,
+  * `statsFromTuples(statsAggregation(..).collect())`, bit for bit: every
+  * value by `doubleToLongBits`, every count and every sum.  Its
+  * per-segment form (`FitStats.bySegment`, which `fitByGroup` reads)
+  * equals the pass over each filtered segment the same way.  Its block
+  * encode (`StatsRuns.encode`, one radix sort) equals the two-sort
+  * encode it replaced, kept here as the oracle.
   *
   * Frames come from ScalaCheck generators run on fixed seeds; a failure
   * names its seed.  Cells mix −0.0 next to 0.0, NaN and null, ±inf,
@@ -35,6 +37,10 @@ class FitStatsSpec extends AnyFunSuite {
     WoeBinning.statsFromTuples(
       WoeBinning.statsAggregation(df, target, cols).as[WoeBinning.StatsTuple].collect())
   }
+
+  /** The stats `fit` reads. */
+  private def statsOf(df: DataFrame, cols: Seq[String]): Map[String, Kernels.VarStats] =
+    FitStats.of(df, "target", cols).varStats(cols)
 
   private def withShufflePartitions[A](n: Int)(f: => A): A = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -78,7 +84,7 @@ class FitStatsSpec extends AnyFunSuite {
     val cols = t.cols.indices.map(i => s"c$i")
     withShufflePartitions(t.shufflePartitions) {
       val df = frame(t)
-      sameStats(WoeBinning.sufficientStats(df, "target", cols),
+      sameStats(statsOf(df, cols),
         oldStats(df, "target", cols)).foreach(msg => fail(s"seed $seed ($t): $msg"))
     }
     val present = t.cols.map { case (ty, c) => c.flatten.filterNot(_.isNaN).map(ty.asDouble) }
@@ -122,8 +128,63 @@ class FitStatsSpec extends AnyFunSuite {
           .when(col("id") % 5 === 2, lit(Double.NaN)).otherwise(col("id") % 3).as("z"),
         ((col("id") * 7919) % 13 < 4).cast("int").as("target"))
     for (n <- Seq(1, 7)) withShufflePartitions(n) {
-      sameStats(WoeBinning.sufficientStats(df, "target", Seq("x", "y", "z")),
+      sameStats(statsOf(df, Seq("x", "y", "z")),
         oldStats(df, "target", Seq("x", "y", "z"))).foreach(msg => fail(s"$n: $msg"))
+    }
+  }
+
+  test("radix block encode == two-sort encode, bit for bit (generated blocks)") {
+    // one scratch for every block, as one task's segments share it
+    val scratch = new StatsRuns.Scratch
+    var cov = EncodeCoverage()
+    for (seed <- 1L to 400L) {
+      val b = genBlock.pureApply(Gen.Parameters.default, Seed(seed))
+      val vals = b.vals.toArray
+      val n = vals.length
+      val ones = vals.indices.filter(b.ones).map(vals).toArray
+      val want = twoSortEncode(vals.clone(), n, ones, ones.length)
+      val got = StatsRuns.encode(vals, b.ones.map(o => (if (o) 1 else 0).toByte).toArray, n, scratch)
+      sameRuns(got, want).foreach(msg => fail(s"seed $seed ($b): $msg"))
+      val counted = StatsRuns.encode(vals, null, n, scratch)
+      assert(!counted.hasTarget, s"seed $seed ($b): a counts-only encode carries target sums")
+      sameRuns(new StatsRuns(counted.values, counted.counts, want.tsums), want)
+        .foreach(msg => fail(s"seed $seed ($b), counts only: $msg"))
+      assert(vals.sameElements(b.vals), s"seed $seed ($b): encode reordered its input")
+      cov = cov.add(b)
+    }
+    info(cov.toString)
+    assert(cov.empty > 0 && cov.single > 0 && cov.allEqual > 0 && cov.fullBlock > 0, cov)
+    assert(cov.allZero > 0 && cov.allOne > 0 && cov.mixed > 0, cov)
+    assert(cov.negative > 0 && cov.infinite == Set(1.0, -1.0) && cov.maxValue == Set(1.0, -1.0), cov)
+    assert(cov.subnormal > 0 && cov.minPositive > 0, cov)
+  }
+
+  test("runs round-trip through serialization: counts as ints when they fit, as longs otherwise") {
+    def roundTrip(r: StatsRuns): (StatsRuns, Int) = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(r); out.close()
+      val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+      (in.readObject().asInstanceOf[StatsRuns], bytes.size)
+    }
+    val n = 10000
+    val values = Array.tabulate(n)(i => i * 0.5 - 7.0)
+    val counts = Array.tabulate(n)(i => 1L + i % 3)
+    val tsums = Array.tabulate(n)(i => (i % 2).toLong)
+    val cases = Seq(
+      ("with a target", new StatsRuns(values, counts, tsums), 16),
+      ("counts only", new StatsRuns(values, counts, null), 12),
+      ("a count over Int.MaxValue", new StatsRuns(values, counts.updated(7, 1L << 40), tsums), 20),
+      ("a target sum over Int.MaxValue", new StatsRuns(values, counts.updated(7, 1L << 40),
+        tsums.updated(7, 1L << 35)), 24),
+      ("empty", StatsRuns.empty(true), 0))
+    def plain(r: StatsRuns) =
+      (r.values.map(doubleToLongBits).toSeq, r.counts.toSeq, Option(r.tsums).map(_.toSeq))
+    for ((what, r, perRun) <- cases) {
+      val (back, size) = roundTrip(r)
+      assert(plain(back) == plain(r), what)
+      // the stream frames its data in 1 kB blocks of 5-byte headers
+      assert(size.toLong <= perRun.toLong * r.size * 1005 / 1000 + 1024, s"$what: $size bytes")
     }
   }
 
@@ -185,7 +246,7 @@ class FitStatsSpec extends AnyFunSuite {
         assert(got.map(_._1) == want, s"seed $seed ($t, $kind): segment keys in String order")
         got.foreach { case (g, s) =>
           sameStats(s.varStats(cols),
-            WoeBinning.sufficientStats(df.filter(col("seg").cast("string") === g), "target", cols))
+            statsOf(df.filter(col("seg").cast("string") === g), cols))
             .foreach(msg => fail(s"seed $seed ($t, $kind), segment '$g': $msg"))
         }
         if (want.contains("\uffff") && want.contains("\ud83d\ude00")) orderSensitive += 1
@@ -211,14 +272,14 @@ class FitStatsSpec extends AnyFunSuite {
     assert(got.map(_._1) == got.map(_._1).sorted)
     // merged over every segment: the stats of all non-null-segment rows
     sameStats(got.map(_._2).reduce(_ merge _).varStats(Seq("x", "y")),
-      WoeBinning.sufficientStats(df.filter(col("seg").isNotNull), "target", Seq("x", "y")))
+      statsOf(df.filter(col("seg").isNotNull), Seq("x", "y")))
       .foreach(msg => fail(s"all segments merged: $msg"))
     // the largest and smallest segments, and a spread between them
     val bySize = got.sortBy(_._2.rows)
     val sample = (bySize.take(3) ++ bySize.takeRight(3) ++ bySize.grouped(40).map(_.head)).distinct
     sample.foreach { case (g, s) =>
       sameStats(s.varStats(Seq("x", "y")),
-        WoeBinning.sufficientStats(df.filter(col("seg") === g), "target", Seq("x", "y")))
+        statsOf(df.filter(col("seg") === g), Seq("x", "y")))
         .foreach(msg => fail(s"segment '$g': $msg"))
     }
   }
@@ -252,7 +313,7 @@ class FitStatsSpec extends AnyFunSuite {
         Row(i.toDouble, t) }, 3),
       StructType(Seq(StructField("x", DoubleType), StructField("target", DoubleType))))
     def message(targets: Seq[Any]) = intercept[IllegalArgumentException] {
-      WoeBinning.sufficientStats(frameOf(targets), "target", Seq("x"))
+      statsOf(frameOf(targets), Seq("x"))
     }.getMessage
     for (bad <- Seq(2.0, 0.5, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
       val m = message(Seq(0.0, null, 1.0, bad, null, 0.0))
@@ -351,9 +412,124 @@ object FitStatsSpec {
     } yield cells.toVector
   }
 
+  /** The block encode the radix pass replaced: the values and,
+    * separately, the values of rows whose target is 1 are sorted with
+    * `Arrays.sort` (in place), then run-length encoded side by side.
+    */
+  def twoSortEncode(vals: Array[Double], nv: Int, ones: Array[Double], no: Int): StatsRuns = {
+    java.util.Arrays.sort(vals, 0, nv)
+    java.util.Arrays.sort(ones, 0, no)
+    val out = new StatsRuns.Builder(nv, true)
+    var i = 0; var p = 0
+    while (i < nv) {
+      val x = vals(i)
+      val start = i
+      while (i < nv && vals(i) == x) i += 1
+      // ones is a sub-multiset of vals, so every smaller one was taken
+      val oneStart = p
+      while (p < no && ones(p) == x) p += 1
+      out.add(x, i - start, p - oneStart)
+    }
+    out.result()
+  }
+
+  /** The first difference between two runs, if any. */
+  def sameRuns(got: StatsRuns, want: StatsRuns): Option[String] =
+    if (got.size != want.size) Some(s"${got.size} vs ${want.size} runs")
+    else (0 until got.size).find(i =>
+      doubleToLongBits(got.values(i)) != doubleToLongBits(want.values(i)) ||
+        got.counts(i) != want.counts(i) || got.tsums(i) != want.tsums(i)).map(i =>
+      s"run $i: (${got.values(i)}, ${got.counts(i)}, ${got.tsums(i)}) vs " +
+        s"(${want.values(i)}, ${want.counts(i)}, ${want.tsums(i)})")
+
+  sealed trait BlockShape
+  case object AllEqual extends BlockShape
+  case object FewValues extends BlockShape
+  case object ManyValues extends BlockShape
+
+  sealed trait Targets
+  case object AllZero extends Targets
+  case object AllOne extends Targets
+  case object Mixed extends Targets
+
+  /** One block as a task buffers it: non-missing values, −0.0 folded. */
+  final case class Block(vals: Vector[Double], ones: Vector[Boolean], shape: BlockShape,
+      targets: Targets) {
+    override def toString: String =
+      s"${vals.length} rows, $shape, $targets, ${vals.distinct.length} distinct"
+  }
+
+  private val Subnormal = Seq(Double.MinPositiveValue, -Double.MinPositiveValue,
+    java.lang.Double.MIN_NORMAL / 3, -java.lang.Double.MIN_NORMAL / 7,
+    Math.nextDown(java.lang.Double.MIN_NORMAL))
+
+  /** Specials, small ints, uniform doubles, and doubles of random bits
+    * (NaN mapped to 0), which vary every byte of the radix key.
+    */
+  private val genValue: Gen[Double] = Gen.frequency(
+    3 -> Gen.oneOf(Special ++ Huge ++ Subnormal),
+    3 -> Gen.choose(-50, 50).map(_.toDouble),
+    2 -> Gen.choose(-1e6, 1e6),
+    2 -> Gen.long.map(java.lang.Double.longBitsToDouble).map(x => if (x.isNaN) 0.0 else x))
+
+  val genBlock: Gen[Block] = for {
+    n <- Gen.frequency(1 -> Gen.const(0), 1 -> Gen.const(1), 6 -> Gen.choose(2, 300),
+      2 -> Gen.choose(301, 5000), 1 -> Gen.const(FitStats.BlockRows))
+    shape <- Gen.oneOf(AllEqual, FewValues, ManyValues)
+    poolSize <- shape match {
+      case AllEqual => Gen.const(1)
+      case FewValues => Gen.choose(2, 10)
+      case ManyValues => Gen.const(math.max(n, 1))
+    }
+    pool <- Gen.listOfN(poolSize, genValue).map(_.toVector)
+    idx <- Gen.listOfN(n, Gen.choose(0, poolSize - 1))
+    targets <- Gen.oneOf(AllZero, AllOne, Mixed)
+    ones <- targets match {
+      case AllZero => Gen.const(List.fill(n)(false))
+      case AllOne => Gen.const(List.fill(n)(true))
+      case Mixed => Gen.listOfN(n, Gen.oneOf(false, true))
+    }
+  } yield Block(idx.map(pool(_) + 0.0).toVector, ones.toVector, shape, targets)
+
+  final case class EncodeCoverage(
+      empty: Int = 0,
+      single: Int = 0,
+      allEqual: Int = 0,
+      fullBlock: Int = 0,
+      allZero: Int = 0,
+      allOne: Int = 0,
+      mixed: Int = 0,
+      negative: Int = 0,
+      infinite: Set[Double] = Set.empty,
+      maxValue: Set[Double] = Set.empty,
+      subnormal: Int = 0,
+      minPositive: Int = 0) {
+    def add(b: Block): EncodeCoverage = {
+      val v = b.vals
+      def has(p: Double => Boolean) = if (v.exists(p)) 1 else 0
+      val several = v.length > 1
+      copy(
+        empty = empty + (if (v.isEmpty) 1 else 0),
+        single = single + (if (v.length == 1) 1 else 0),
+        allEqual = allEqual + (if (several && v.distinct.length == 1) 1 else 0),
+        fullBlock = fullBlock + (if (v.length == FitStats.BlockRows) 1 else 0),
+        allZero = allZero + (if (several && !b.ones.contains(true)) 1 else 0),
+        allOne = allOne + (if (several && !b.ones.contains(false)) 1 else 0),
+        mixed = mixed + (if (b.ones.contains(true) && b.ones.contains(false)) 1 else 0),
+        negative = negative + has(_ < 0),
+        infinite = infinite ++ v.filter(_.isInfinite).map(math.signum),
+        maxValue = maxValue ++ v.filter(x => math.abs(x) == Double.MaxValue).map(math.signum),
+        subnormal = subnormal + has(x => x != 0 && math.abs(x) < java.lang.Double.MIN_NORMAL),
+        minPositive = minPositive + has(x => math.abs(x) == Double.MinPositiveValue))
+    }
+  }
+
   private def bits(s: Kernels.VarStats) =
     (s.groups.map { case (v, c, t) => (doubleToLongBits(v), c, t) },
       s.nanCount, s.nanTsum, s.totalRows, s.totalTsum)
+
+  private def groupBits(s: Kernels.VarStats, i: Int) =
+    (doubleToLongBits(s.values(i)), s.counts(i), s.tsums(i))
 
   /** The first difference between two stats maps, if any. */
   def sameStats(got: Map[String, Kernels.VarStats],
@@ -362,11 +538,10 @@ object FitStatsSpec {
     else want.keys.toSeq.sorted.iterator.collect {
       case v if bits(got(v)) != bits(want(v)) =>
         val (g, w) = (got(v), want(v))
-        val at = g.groups.indices.find(i => i >= w.groups.length ||
-          bits(g.copy(groups = Vector(g.groups(i)))) != bits(w.copy(groups = Vector(w.groups(i)))))
+        val at = (0 until g.size).find(i => i >= w.size || groupBits(g, i) != groupBits(w, i))
         s"variable $v: missing (${g.nanCount}, ${g.nanTsum}) vs (${w.nanCount}, ${w.nanTsum}), " +
           s"totals (${g.totalRows}, ${g.totalTsum}) vs (${w.totalRows}, ${w.totalTsum}), " +
-          s"${g.groups.length} vs ${w.groups.length} groups, first differing group " +
+          s"${g.size} vs ${w.size} groups, first differing group " +
           at.map(i => s"$i: ${g.groups(i)} vs ${w.groups.lift(i)}").getOrElse("none")
     }.nextOption()
 

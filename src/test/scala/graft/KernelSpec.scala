@@ -9,6 +9,7 @@ import graft.core._
   * artifact is not in the offline cache).
   */
 class KernelSpec extends AnyFunSuite {
+  import KernelSpec._
 
   private def gs(v: Double, size: Double, mean: Double, std: Double = 0.0) =
     GroupStat(v, size, mean, std)
@@ -34,7 +35,7 @@ class KernelSpec extends AnyFunSuite {
         GroupStat(i.toDouble, sz.toDouble, bads.toDouble / sz,
           Kernels.binaryStd(sz, bads))
       }.toVector
-      val pooled = Kernels.monotonePool(stats)
+      val pooled = pool(stats)
       assert(pooled.nonEmpty)
       pooled.sliding(2).foreach {
         case Vector(a, b) => assert(b.mean < a.mean,
@@ -137,13 +138,11 @@ class KernelSpec extends AnyFunSuite {
   test("detectOrder: fractional rule on exact quartile boundaries") {
     // 8 rows: values 1..8, target 1 for low half → bottom quarter (2 rows)
     // holds 2 bads, top quarter 0 → ascending order = true
-    val s = Kernels.VarStats("v",
-      (1 to 8).map(i => (i.toDouble, 1L, if (i <= 4) 1L else 0L)).toVector,
-      0, 0, 8, 4)
+    val s = varStats((1 to 8).map(i => (i.toDouble, 1L, if (i <= 4) 1L else 0L)).toVector)
+    assert(s.totalRows == 8 && s.totalTsum == 4)
     assert(Kernels.detectOrder(s))
-    val s2 = Kernels.VarStats("v",
-      (1 to 8).map(i => (i.toDouble, 1L, if (i > 4) 1L else 0L)).toVector,
-      0, 0, 8, 4)
+    val s2 = varStats((1 to 8).map(i => (i.toDouble, 1L, if (i > 4) 1L else 0L)).toVector)
+    assert(s2.totalRows == 8 && s2.totalTsum == 4)
     assert(!Kernels.detectOrder(s2))
   }
 
@@ -190,7 +189,7 @@ class KernelSpec extends AnyFunSuite {
       }.toVector
       val tot = groups.map(_._2).sum
       val tsum = groups.map(_._3).sum
-      val s = Kernels.VarStats("v", groups, 0, 0, tot, tsum)
+      val s = varStats(groups)
       val bins = Kernels.fitVariable(s, WoeConfig(nThreshold = tot / 10.0))
       assert(bins.map(_.size).sum == tot.toDouble)
       assert(math.abs(bins.map(_.bads).sum - tsum.toDouble) < 1e-6)
@@ -203,6 +202,219 @@ class KernelSpec extends AnyFunSuite {
       bins.map(_.woe).sliding(2).foreach {
         case Seq(a, b) => assert(b <= a || a.isNaN || b.isNaN)
         case _ =>
+      }
+    }
+  }
+
+  private def groupBits(g: GroupStat) =
+    Seq(g.value, g.size, g.mean, g.std).map(java.lang.Double.doubleToLongBits)
+
+  private def binsBits(bs: Vector[WoeBin]) = bs.map(FitStatsSpec.binBits)
+
+  test("monotonePool: array kernel == GroupStat-vector kernel, bit for bit (seeded)") {
+    // the pooling property's generator, plus runs of equal means
+    val rnd = new scala.util.Random(7)
+    for (trial <- 1 to 400) {
+      val k = rnd.nextInt(60)
+      val stats = (0 until k).map { i =>
+        val sz = 1L + rnd.nextInt(if (trial % 2 == 0) 3 else 50)
+        val bads = if (rnd.nextInt(4) == 0) 0L else rnd.nextLong(sz + 1)
+        GroupStat(i.toDouble, sz.toDouble, bads.toDouble / sz, Kernels.binaryStd(sz, bads))
+      }.toVector
+      val got = pool(stats)
+      val want = Vectors.monotonePool(stats)
+      assert(got.map(groupBits) == want.map(groupBits), s"trial $trial: $stats -> $got, want $want")
+    }
+  }
+
+  /** Seeded stats: `k` ascending values with gaps, counts 1..maxCount, a
+    * missing bucket half the time.
+    */
+  private def genStats(rnd: scala.util.Random, k: Int, maxCount: Int): Kernels.VarStats = {
+    var v = rnd.nextInt(5) - 2.0
+    val groups = (0 until k).map { _ =>
+      v += 0.5 + rnd.nextInt(4)
+      val sz = 1L + rnd.nextInt(maxCount)
+      (v, sz, if (rnd.nextInt(5) == 0) sz else rnd.nextLong(sz + 1))
+    }.toVector
+    val nan = if (rnd.nextBoolean()) rnd.nextInt(40).toLong else 0L
+    varStats(groups, nan, if (nan > 0) rnd.nextLong(nan + 1) else 0L)
+  }
+
+  test("detectOrder and fitVariable: array kernels == GroupStat-vector kernels, bit for bit (seeded)") {
+    val rnd = new scala.util.Random(13)
+    var orders = Set.empty[Boolean]
+    for (trial <- 1 to 300) {
+      val s = genStats(rnd, 1 + rnd.nextInt(40), if (trial % 3 == 0) 2 else 200)
+      val order = Kernels.detectOrder(s)
+      assert(order == Vectors.detectOrder(s), s"trial $trial: ${s.groups}")
+      orders += order
+      for (cfg <- Seq(WoeConfig(nThreshold = math.ceil(s.totalRows / 10.0)),
+          WoeConfig(nThreshold = 1, sortOverload = Some(true)),
+          WoeConfig(nThreshold = math.ceil(s.totalRows / 20.0), mergeThreshold = Some(0.2)))) {
+        val got = Kernels.fitVariable(s, cfg)
+        val want = Vectors.fitVariable(s, cfg)
+        assert(binsBits(got) == binsBits(want), s"trial $trial, $cfg: ${s.groups} -> $got, want $want")
+      }
+    }
+    assert(orders == Set(true, false), orders)
+  }
+
+  test("sentinel split: fitOne with sepValue == the GroupStat-vector split, bit for bit (seeded)") {
+    val rnd = new scala.util.Random(17)
+    for (trial <- 1 to 200) {
+      val s = genStats(rnd, 2 + rnd.nextInt(30), 100)
+      val at = rnd.nextInt(s.size)
+      val sep = s.values(at)
+      val cfg = WoeConfig(nThreshold = math.ceil(s.totalRows / 20.0))
+      // woe_binning_sep's split over the boxed groups
+      val (sepGroups, rest) = s.groups.partition(_._1 == sep)
+      val want = Kernels.stitchSentinel(
+        Vectors.fitVariable(varStats(sepGroups), cfg),
+        Vectors.fitVariable(varStats(rest, s.nanCount, s.nanTsum), cfg),
+        sep, s.totalTsum.toDouble, s.totalRows.toDouble)
+      val got = graft.spark.WoeBinning.fitOne("v", "target", Map("v" -> s), cfg, Some(sep))
+      assert(binsBits(got) == binsBits(want), s"trial $trial, sep $sep: ${s.groups}")
+    }
+  }
+
+  test("a 100k-distinct near-unique variable: array kernels == GroupStat-vector kernels, bit for bit") {
+    val rnd = new scala.util.Random(23)
+    val k = 100000
+    val groups = (0 until k).map { i =>
+      val sz = 1L + (if (rnd.nextInt(10) == 0) 1 else 0)
+      val p = 0.92 - 0.9 * i / k
+      (i * 0.01 - 300.0, sz, (0L until sz).count(_ => rnd.nextDouble() < p).toLong)
+    }.toVector
+    val s = varStats(groups, 500, 60)
+    assert(s.size == k)
+    assert(Kernels.detectOrder(s) == Vectors.detectOrder(s))
+    for (cfg <- Seq(WoeConfig(nThreshold = math.ceil(s.totalRows / 20.0)),
+        WoeConfig(nThreshold = 300, sortOverload = Some(true)))) {
+      val got = Kernels.fitVariable(s, cfg)
+      val want = Vectors.fitVariable(s, cfg)
+      assert(got.length > 2, got)
+      assert(binsBits(got) == binsBits(want), s"$cfg: ${got.length} vs ${want.length} bins")
+    }
+  }
+}
+
+object KernelSpec {
+
+  /** One variable's stats from ascending (value, count, targetSum) groups. */
+  def varStats(groups: Vector[(Double, Long, Long)], nanCount: Long = 0,
+      nanTsum: Long = 0): Kernels.VarStats =
+    new Kernels.VarStats("v", groups.map(_._1).toArray, groups.map(_._2).toArray,
+      groups.map(_._3).toArray, nanCount, nanTsum)
+
+  /** The in-place array `monotonePool` over a vector of groups. */
+  def pool(groups: Vector[GroupStat]): Vector[GroupStat] = {
+    val value = groups.map(_.value).toArray
+    val size = groups.map(_.size).toArray
+    val mean = groups.map(_.mean).toArray
+    val std = groups.map(_.std).toArray
+    val n = Kernels.monotonePool(value, size, mean, std)
+    Vector.tabulate(n)(i => GroupStat(value(i), size(i), mean(i), std(i)))
+  }
+
+  /** The kernels over boxed `GroupStat` vectors that the array kernels
+    * replaced, kept as their oracle.
+    */
+  object Vectors {
+    def monotonePool(groups: Vector[GroupStat]): Vector[GroupStat] = {
+      var cur: Array[GroupStat] = groups.toArray
+      var del: Array[Boolean] = new Array[Boolean](cur.length)
+      while (true) {
+        val arr = {
+          val b = Array.newBuilder[GroupStat]
+          var t = 0
+          while (t < cur.length) { if (!del(t)) b += cur(t); t += 1 }
+          b.result()
+        }
+        val dflags = new Array[Boolean](arr.length)
+        val len = arr.length
+        var i = 0
+        var outerBreak = false
+        while (!outerBreak) {
+          var j = i + 1
+          if (j >= len) outerBreak = true
+          else if (arr(j).mean < arr(i).mean) {
+            i += 1
+          } else {
+            var pooling = true
+            while (pooling) {
+              val gi = arr(i); val gj = arr(j)
+              val n = gj.size + gi.size
+              val m = (gj.size * gj.mean + gi.size * gi.mean) / n
+              val s =
+                if (n == 2.0) Kernels.popStdOf2(gj.mean, gi.mean)
+                else math.sqrt((gj.size * gj.std * gj.std + gi.size * gi.std * gi.std) / n)
+              arr(i) = gi.copy(size = n, mean = m, std = s)
+              dflags(j) = true
+              j += 1
+              if (j >= len) pooling = false
+              else if (arr(j).mean < arr(i).mean) { i = j; pooling = false }
+            }
+            if (j >= len) outerBreak = true
+          }
+        }
+        cur = arr
+        del = dflags
+        if (!dflags.exists(identity)) return arr.toVector
+      }
+      Vector.empty // unreachable
+    }
+
+    def detectOrder(s: Kernels.VarStats): Boolean = {
+      val n = s.totalRows
+      val q1 = n / 4
+      val q3 = (3L * n) / 4
+      def takeFirst(k: Long): Double = {
+        var sum = 0.0
+        var taken = 0L
+        def partial(cnt: Long, tsum: Long): Unit = {
+          val r = (k - taken).toDouble
+          sum += tsum.toDouble / cnt.toDouble * r
+          taken = k
+        }
+        val it = s.groups.iterator
+        var doneG = false
+        while (!doneG && it.hasNext) {
+          val (_, cnt, tsum) = it.next()
+          if (taken + cnt <= k) { sum += tsum.toDouble; taken += cnt }
+          else { partial(cnt, tsum); doneG = true }
+          if (taken == k) doneG = true
+        }
+        if (taken < k && s.nanCount > 0) partial(s.nanCount, s.nanTsum)
+        sum
+      }
+      takeFirst(q1) > s.totalTsum.toDouble - takeFirst(q3)
+    }
+
+    def fitVariable(s: Kernels.VarStats, cfg: WoeConfig): Vector[WoeBin] = {
+      val order = detectOrder(s)
+      val intervalEnd = if (order) Double.PositiveInfinity else Double.NegativeInfinity
+      val ascending = cfg.sortOverload match {
+        case Some(true) => true
+        case _ => order
+      }
+      val statsAsc = s.groups.map { case (v, cnt, tsum) =>
+        GroupStat(v, cnt.toDouble, tsum.toDouble / cnt.toDouble, Kernels.binaryStd(cnt, tsum))
+      }
+      val sorted = if (ascending) statsAsc else statsAsc.reverse
+      val pooled = monotonePool(sorted)
+      val mergedGroups =
+        Kernels.significanceMerge(pooled, cfg.nThreshold, cfg.nOccurrences, cfg.pThreshold)
+      var bins = Kernels.assembleIntervals(s.variable, mergedGroups, intervalEnd)
+      if (s.nanCount > 0) {
+        val nanMean = s.nanTsum.toDouble / s.nanCount.toDouble
+        bins = bins :+ WoeBin(s.variable, Double.NaN, Double.NaN,
+          s.nanCount.toDouble, nanMean, 0, 0, 0, 0, 0, 0)
+      }
+      bins = Kernels.finalizeWoe(bins)
+      cfg.mergeThreshold match {
+        case Some(mt) => Kernels.mergeByWoeGap(bins, mt)
+        case None => bins
       }
     }
   }

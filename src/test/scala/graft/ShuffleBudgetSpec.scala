@@ -259,7 +259,16 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       graft.spark.WoeBinning.exactMedians(batch(400000L), Seq("x", "y")); ()
     }
     assert(exact.resultBytes > 10 * bound, s"exact medians collected ${exact.resultBytes}")
-    info(s"exact medians at 400000 rows: ${exact.resultBytes} task-result bytes")
+    // a counts-only pass ships each task's runs as a value and a count,
+    // no target sums: at most 16 B per run plus a fixed 8 kB per task
+    val runs = batch(400000L).groupBy(spark_partition_id())
+      .agg(countDistinct("x") + countDistinct("y")).collect().map(_.getLong(1)).sum
+    val countsBound = 16L * runs + 8192L * exact.tasks
+    assert(exact.resultBytes <= countsBound,
+      s"exact medians collected ${exact.resultBytes} bytes, bound $countsBound " +
+        s"($runs runs from ${exact.tasks} tasks)")
+    info(s"exact medians at 400000 rows: ${exact.resultBytes} task-result bytes, bound " +
+      s"$countsBound ($runs runs from ${exact.tasks} tasks)")
     // a middle pair that can overflow takes the exact job as well
     val huge = spark.range(0, 6, 1, 2).select(
       (lit(Double.MaxValue) - col("id")).as("x"), lit(1.0).as("y"))
