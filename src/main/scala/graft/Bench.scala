@@ -101,11 +101,11 @@ object Bench {
     // r7-r10); read their rows as "whole pipeline", not a new stage.
     val benchExclude = Set.empty[String]
     if (canon(warmDir) != canon(sfDir)) {
-      SparkEntry.queries.foreach { case (name, fn) =>
-        if (!benchExclude.contains(name) && only.forall(_.contains(name)))
-          try { fn(spark, warmDir).count() }
+      SparkEntry.queries.foreach { q =>
+        if (!benchExclude.contains(q.name) && only.forall(_.contains(q.name)))
+          try { q.run(spark, warmDir).count() }
           catch { case e: Throwable =>
-            System.err.println(s"[bench] warmup $name: ${e.getMessage}")
+            System.err.println(s"[bench] warmup ${q.name}: ${e.getMessage}")
           }
       }
       // drop the small-SF cached data so every timed query reads its
@@ -128,20 +128,17 @@ object Bench {
       t
     }
     var failed = List.empty[String]
-    val benchQueries = SparkEntry.queries.toSeq
-      .filter { case (name, _) =>
-        !benchExclude.contains(name) && only.forall(_.contains(name)) }
+    val benchQueries = SparkEntry.queries
+      .filter(q => !benchExclude.contains(q.name) && only.forall(_.contains(q.name)))
     // one-time-build queries: materialize the store/table at the
     // benchmark SF untimed (BuildOnce memoizes it), so all timed
     // passes — including the first — measure only the probe
-    benchQueries.foreach { case (name, fn) =>
-      if (SparkEntry.oneTimeBuild.contains(name)) {
-        try { fn(spark, sfDir).count() }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] setup $name: ${e.getMessage}")
-        }
-        graft.ops.DedupOps.unpersistAll()
+    benchQueries.filter(_.oneTimeBuild).foreach { q =>
+      try { q.run(spark, sfDir).count() }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] setup ${q.name}: ${e.getMessage}")
       }
+      graft.ops.DedupOps.unpersistAll()
     }
     // host-contention attribution companion to gcMs: the 1-minute
     // loadavg at the start of each timed run — a slow run with flat GC
@@ -159,12 +156,13 @@ object Bench {
     val acc = collection.mutable.Map.empty[String, Vector[(Double, Long, Double, Double)]]
       .withDefaultValue(Vector.empty)
     val hostCores = hostCpus()
-    for (_ <- 1 to runs; (name, fn) <- benchQueries) {
+    for (_ <- 1 to runs; q <- benchQueries) {
+      val name = q.name
       val la = loadavg()
       val g0 = gcMs()
       val st0 = stealJiffies()
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
+      try { q.run(spark, sfDir).count() }
       catch { case e: Throwable =>
         if (!failed.contains(name)) failed ::= name
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -176,7 +174,7 @@ object Bench {
       acc(name) = acc(name) :+ ((dt, gcMs() - g0, la, stealPct))
     }
     val results: Seq[(String, Vector[(Double, Long, Double, Double)])] =
-      benchQueries.map { case (name, _) => name -> acc(name) }
+      benchQueries.map(q => q.name -> acc(q.name))
     def median(ts: Vector[Double]): Double = {
       val s = ts.sorted
       if (s.length % 2 == 1) s(s.length / 2)
@@ -208,8 +206,8 @@ object Bench {
     // each, after the timed passes (the medians above are untouched) —
     // the durable record carries stage → seconds so the e2e wall-time
     // is attributable to the stage that grew
-    val stagesJson = SparkEntry.stagedRuns.toSeq
-      .filter { case (name, _) => benchQueries.exists(_._1 == name) }
+    val stagesJson = benchQueries
+      .flatMap(q => q.stages.map(q.name -> _))
       .flatMap { case (name, fn) =>
         try {
           val secs = fn(spark, sfDir)

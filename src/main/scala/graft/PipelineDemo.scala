@@ -19,22 +19,19 @@ import graft.ops._
   */
 object PipelineDemo {
 
-  /** Wave → seconds of the most recent [[run]] on this JVM.  Since the
-    * r19 boundary fusion the pipeline blocks only where a driver-side
-    * value is genuinely needed (the CC loop, the decontamination count
-    * that sizes the rebalance target, the packers' per-partition offset
-    * collects, the final sequence count, and ONE union-of-counts job
-    * that yields every remaining stage count) — so attribution is per
-    * blocking WAVE, not per oracle stage: each wave is timed from the
-    * end of the previous wave through its own action, construction
-    * work included, and the map sums to ≈ the e2e wall time.  Bench
-    * embeds it in the durable record after its timed passes.
-    */
-  @volatile var lastStageSeconds: Seq[(String, Double)] = Nil
-
   /** The pipeline as a function: corpus in, packed training plan out.
     * Returns (kept corpus with split+shard columns, the per-(doc,
-    * sequence) packing plan for the train split, per-stage counts).
+    * sequence) packing plan for the train split, per-stage counts,
+    * wave → seconds).
+    *
+    * The pipeline blocks only where a driver-side value is genuinely
+    * needed (the CC loop, the decontamination count that sizes the
+    * rebalance target, the packers' per-partition offset collects, the
+    * final sequence count, and ONE union-of-counts job that yields
+    * every remaining stage count), so the seconds are per blocking
+    * WAVE, not per oracle stage: each wave is timed from the end of the
+    * previous wave through its own action, construction work included,
+    * and they sum to ≈ the e2e wall time.
     *
     * Every stage boundary is persisted, so each stage EXECUTES ONCE:
     * downstream actions materialize the caches they pass through, and
@@ -56,7 +53,8 @@ object PipelineDemo {
     * derivation of cached `out` and needs no cache of its own).
     */
   def run(spark: SparkSession, docs: DataFrame,
-      benchmark: DataFrame): (DataFrame, DataFrame, Seq[(String, Long)]) = {
+      benchmark: DataFrame)
+      : (DataFrame, DataFrame, Seq[(String, Long)], Seq[(String, Double)]) = {
     val secs = Seq.newBuilder[(String, Double)]
     val boundaries = scala.collection.mutable.Buffer.empty[DataFrame]
     def boundary(df: DataFrame): DataFrame = { boundaries += df.persist(); df }
@@ -185,8 +183,7 @@ object PipelineDemo {
         "window_dedup" -> substringClean, "decontaminate" -> clean,
         "rebalance" -> balanced, "packed" -> out)
       val stages = timed("stage_counts")(countConcurrently(stageFrames))
-      lastStageSeconds = secs.result()
-      (out, seqPlan, stages)
+      (out, seqPlan, stages, secs.result())
     } finally {
       // releasing upstream caches is safe: `out` and `seqPlan` are
       // materialized caller-owned caches
@@ -226,7 +223,7 @@ object PipelineDemo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val (out, seqPlan, stages) = run(spark, docs.filter(col("doc_id") >= 20),
+    val (out, seqPlan, stages, _) = run(spark, docs.filter(col("doc_id") >= 20),
       docs.filter(col("doc_id") < 20))
     println("== pipeline stages ==")
     stages.foreach { case (name, n) => println(f"$name%-16s $n%7d docs") }

@@ -126,7 +126,7 @@ object Profile {
     // scratch dir has no stageable single-file table, so don't abort
     // the later stages over it)
     try time("q_fit_streaming full") {
-      SparkEntry.queries("q_fit_streaming")(spark, sfDir).count()
+      SparkEntry.query("q_fit_streaming").run(spark, sfDir).count()
     } catch {
       case e: RuntimeException =>
         println(s"[profile] q_fit_streaming skipped: ${e.getMessage}")

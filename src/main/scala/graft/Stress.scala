@@ -191,7 +191,7 @@ object Stress {
     }
     stage("bpe encode (12 merges)") {
       println("[stress]   total bpe tokens: " + TextOps.bpeEncode(
-          corpus, "doc_id", "text", SparkEntry.bpeFixtureMerges)
+          corpus, "doc_id", "text", board.TextQueries.bpeFixtureMerges)
         .select(sum("n_bpe_tokens")).head().get(0))
     }
     stage("url normalize + domain cap (the ONE shuffle)") {

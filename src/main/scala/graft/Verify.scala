@@ -1,17 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each board query's result → parquet, plus
+  * oracle_sql.json (each query's oracle over the same sfDir), for the
+  * DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd+ args: run only the named queries (dev aid; the
     // driver always passes exactly two, so its surface is unchanged)
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    // the oracle SQL must read the SAME corpus dir the queries do
-    // (q_parquet_footer interpolates file paths into its SQL)
-    SparkEntry.oracleDir = sfDir
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -23,9 +21,10 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      .filter(q => only.isEmpty || only(q.name))
+      .foreach { q =>
+      val name = q.name
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -51,8 +50,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // the oracle SQL reads the SAME corpus dir the queries do (the
+    // storage-metadata oracles interpolate file paths into their SQL)
+    val json = SparkEntry.queries
+      .map(spec => s"${q(spec.name)}: ${q(spec.oracle(sfDir))}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

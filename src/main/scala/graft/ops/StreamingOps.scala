@@ -21,6 +21,40 @@ import org.apache.spark.sql.types._
   */
 object StreamingOps {
 
+  /** The lock every stager under /tmp/graft-stream takes ([[stageAsDir]]
+    * and the board's fixture stagers), so concurrent suites cannot
+    * interleave a stager's delete/create pairs.
+    */
+  private[graft] val stageLock = new Object
+
+  /** Stage a single-file table behind a directory symlink (file-stream
+    * sources require a directory).  Keyed by sanitized path PLUS an
+    * md5 suffix (sanitization alone can collide: "sf-1" vs "sf_1");
+    * the symlink is re-created under a lock so a dangling link cannot
+    * poison later runs and concurrent suites cannot interleave the
+    * delete/create pair.
+    */
+  private[graft] def stageAsDir(dir: String, table: String): String =
+    stageLock.synchronized {
+      val md = java.security.MessageDigest.getInstance("MD5")
+        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val key = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + md
+      val staged = java.nio.file.Paths.get("/tmp/graft-stream", key, table)
+      java.nio.file.Files.createDirectories(staged)
+      val link = staged.resolve(s"$table.parquet")
+      java.nio.file.Files.deleteIfExists(link)
+      java.nio.file.Files.createSymbolicLink(
+        link, java.nio.file.Paths.get(dir, s"$table.parquet"))
+      staged.toString
+    }
+
+  /** `maxFilesPerTrigger` of the AvailableNow drains
+    * ([[runShardCensusStream]], [[runWarcCdxStream]]): each micro-batch
+    * carries ~1.5 s of fixed machinery, so the drain takes few, large
+    * batches.
+    */
+  private[graft] val drainFilesPerTrigger = 16384
+
   /** Run `body` (a start→drain of one file-source stream) with the
     * session's parallel-listing threshold raised to `filesPerBatch`,
     * restoring the prior value after.
@@ -185,7 +219,7 @@ object StreamingOps {
   def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
     // the file-stream source insists on a directory; the testdata ships
     // one parquet FILE per table → stage a symlink dir
-    val staged = graft.SparkEntry.stageAsDir(dir, "events")
+    val staged = stageAsDir(dir, "events")
     val kind = sniffTsKind(spark, staged)
     confFor(spark, kind)
     withEventTime(normalizeTs(
@@ -326,8 +360,8 @@ object StreamingOps {
     // 100 MB-1 GB shards that means HUNDREDS, and the per-batch
     // machinery vanishes against the per-shard walk time.
     val name = s"shard_census_${System.nanoTime()}"
-    withDriverSideBatchListing(spark, 16384) {
-      val q = shardCensusStream(spark, dir, maxFilesPerTrigger = 16384)
+    withDriverSideBatchListing(spark, drainFilesPerTrigger) {
+      val q = shardCensusStream(spark, dir, maxFilesPerTrigger = drainFilesPerTrigger)
         .writeStream.outputMode("append").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -820,8 +854,8 @@ object StreamingOps {
     */
   def runWarcCdxStream(spark: SparkSession, dir: String): DataFrame = {
     val name = s"warc_cdx_${System.nanoTime()}"
-    withDriverSideBatchListing(spark, 16384) {
-      val q = warcCdxStream(spark, dir, maxFilesPerTrigger = 16384)
+    withDriverSideBatchListing(spark, drainFilesPerTrigger) {
+      val q = warcCdxStream(spark, dir, maxFilesPerTrigger = drainFilesPerTrigger)
         .writeStream.outputMode("append").format("memory").queryName(name)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()

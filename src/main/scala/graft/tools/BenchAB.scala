@@ -49,7 +49,7 @@ object BenchAB {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val controlFns = controls.map(n => n -> graft.SparkEntry.queries(n))
+    val controlFns = controls.map(n => n -> graft.SparkEntry.query(n).run)
     type Task = (String, () => Unit)
     def release(): Unit = graft.ops.DedupOps.unpersistAll()
     val armA: Task = ("A", () => { variant.a(spark, sfDir).count(); release() })

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev-only: print the formatted physical plan of a SparkEntry query
+/** Dev-only: print the formatted physical plan of a board query
   * (args: queryName [sfDir]) — the `.explain("formatted")` iterate-on-
   * the-plan loop the build discipline calls for, without ad-hoc code.
   */
@@ -19,7 +19,7 @@ object ExplainQuery {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val df = graft.SparkEntry.queries(name)(spark, dir)
+    val df = graft.SparkEntry.query(name).run(spark, dir)
     if (args.contains("-run")) { df.count(); df.explain("formatted") }
     else df.explain("formatted")
     spark.stop()

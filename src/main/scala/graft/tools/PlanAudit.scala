@@ -38,9 +38,10 @@ object PlanAudit {
       "HashAggregate", "ObjectHashAggregate", "Sort", "Window", "Generate",
       "SerializeFromObject", "MapElements", "MapPartitions", "Expand")
     var failed = List.empty[String]
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    graft.SparkEntry.queries.sortBy(_.name).foreach { q =>
+      val name = q.name
       try {
-        val df = fn(spark, dir)
+        val df = q.run(spark, dir)
         // sparkPlan, not executedPlan: AdaptiveSparkPlanExec exposes no
         // children, so foreach over the AQE wrapper sees one node
         val c = census(df.queryExecution.sparkPlan)

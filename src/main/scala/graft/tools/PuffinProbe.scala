@@ -36,10 +36,10 @@ object PuffinProbe {
       val footers = graft.ops.StorageOps.puffinFooters(media, "id", "content")
       time("synth+footers") { noop(footers) }
       time("q_puffin_meta full") {
-        noop(graft.SparkEntry.queries("q_puffin_meta")(spark, sfDir))
+        noop(graft.SparkEntry.query("q_puffin_meta").run(spark, sfDir))
       }
       time("q_puffin_dv full") {
-        noop(graft.SparkEntry.queries("q_puffin_dv")(spark, sfDir))
+        noop(graft.SparkEntry.query("q_puffin_dv").run(spark, sfDir))
         graft.ops.DedupOps.unpersistAll()
       }
     }

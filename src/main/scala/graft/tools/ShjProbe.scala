@@ -23,7 +23,7 @@ object ShjProbe {
     // warm both flavors
     for (pref <- Seq("true", "false"); q <- qs) {
       spark.conf.set("spark.sql.join.preferSortMergeJoin", pref)
-      graft.SparkEntry.queries(q)(spark, dir).count()
+      graft.SparkEntry.query(q).run(spark, dir).count()
       graft.ops.DedupOps.unpersistAll()
     }
     val acc = collection.mutable.Map.empty[(String, String), List[Double]]
@@ -31,7 +31,7 @@ object ShjProbe {
     for (pass <- 1 to 3; pref <- Seq("true", "false"); q <- qs) {
       spark.conf.set("spark.sql.join.preferSortMergeJoin", pref)
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(q)(spark, dir).count()
+      graft.SparkEntry.query(q).run(spark, dir).count()
       graft.ops.DedupOps.unpersistAll()
       acc((q, pref)) = (System.nanoTime() - t0) / 1e9 :: acc((q, pref))
     }

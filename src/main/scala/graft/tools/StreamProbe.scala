@@ -44,8 +44,8 @@ object StreamProbe {
       spark.catalog.dropTempView(name)
     }
 
-    val tarDir = graft.SparkEntry.stageShardFiles(spark, sfDir)
-    val warcDir = graft.SparkEntry.stageWarcGzFiles(spark, sfDir)
+    val tarDir = graft.board.StreamingQueries.stageShardFiles(spark, sfDir)
+    val warcDir = graft.board.StreamingQueries.stageWarcGzFiles(spark, sfDir)
     // A/B: default listing threshold (32 → a 5000-task Spark job per
     // getBatch) vs driver-side listing of the already-enumerated files
     if (args.length > 1 && args(1) == "driver-list")

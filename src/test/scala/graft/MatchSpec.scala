@@ -80,7 +80,7 @@ class MatchSpec extends AnyFunSuite {
     // every shipped pattern must be borderless (no proper prefix that
     // is also a suffix) — the precondition for the oracle's
     // replace-delta count to equal the AC all-ends count
-    SparkEntry.blockPatterns.foreach { p =>
+    board.DedupQueries.blockPatterns.foreach { p =>
       val bordered = (1 until p.length).exists(k =>
         p.substring(0, k) == p.substring(p.length - k))
       assert(!bordered, s"pattern '$p' has a border")

@@ -5827,7 +5827,7 @@ class OpsSpec extends AnyFunSuite {
         .where(col("quality_score") >= 0.5 && col("b.n_flagged") < 10)
         .select(col("doc_id"), col("quality_score"), col("b.n_flagged"),
           TextOps.redactPii(col("text")).as("clean"))
-    val staged = graft.SparkEntry.stageAsDir(dir, "documents")
+    val staged = graft.ops.StreamingOps.stageAsDir(dir, "documents")
     val stream = spark.readStream.schema(batch.schema).parquet(staged)
     val name = s"scrub_${System.nanoTime()}"
     val q = scrub(stream).writeStream.outputMode("append")

@@ -17,7 +17,7 @@ class PipelineSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     val corpus = docs.filter(col("doc_id") >= 20)
     val bench = docs.filter(col("doc_id") < 20)
-    val (out, seqPlan, stages) = PipelineDemo.run(spark, corpus, bench)
+    val (out, seqPlan, stages, waveSeconds) = PipelineDemo.run(spark, corpus, bench)
     val counts = stages.map(_._2)
     assert(stages.head._1 == "input" && counts.head == corpus.count())
     // every filtering stage can only shrink the corpus
@@ -37,7 +37,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(spanRows.map(_._1).distinct.toSet.subsetOf(
       rows.filter(_._2 == "train").map(_._1).toSet))
     // deterministic: a second full run yields the identical plan
-    val (out2, seqPlan2, stages2) = PipelineDemo.run(spark, corpus, bench)
+    val (out2, seqPlan2, stages2, _) = PipelineDemo.run(spark, corpus, bench)
     assert(stages2 == stages)
     val rows2 = out2.select("doc_id", "split", "shard_id", "n_tokens")
       .collect().map(r =>
@@ -54,10 +54,10 @@ class PipelineSpec extends AnyFunSuite {
     // fused pipeline (r19 boundary fusion: the oracle-gated stage
     // counts come from one union job, so attribution is per driver
     // barrier, not per stage), in order
-    assert(PipelineDemo.lastStageSeconds.map(_._1) ==
+    assert(waveSeconds.map(_._1) ==
       Seq("quality_gate", "dedup_cc", "decontaminate", "rebalance_pack",
         "seq_pack", "stage_counts"))
-    assert(PipelineDemo.lastStageSeconds.forall(_._2 >= 0.0))
+    assert(waveSeconds.forall(_._2 >= 0.0))
   }
 
   test("selection pipeline: timed (staged) flavor returns the identical result") {

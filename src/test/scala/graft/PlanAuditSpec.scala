@@ -43,9 +43,10 @@ class PlanAuditSpec extends AnyFunSuite {
     assume(new java.io.File(dir).isDirectory, s"$dir missing")
     var built = 0
     val offenders = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    SparkEntry.queries.sortBy(_.name).foreach { q =>
+      val name = q.name
       try {
-        val plan = fn(spark, dir).queryExecution.sparkPlan
+        val plan = q.run(spark, dir).queryExecution.sparkPlan
         built += 1
         plan.foreach {
           case _: CartesianProductExec =>

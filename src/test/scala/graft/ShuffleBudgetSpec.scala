@@ -280,7 +280,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     val textBytes = docs.agg(sum(length(col("text")))).head.getLong(0)
     val bytes = shuffleBytes {
       graft.ops.MatchOps.matchSummary(
-        docs, "doc_id", "text", SparkEntry.blockPatterns).count()
+        docs, "doc_id", "text", board.DedupQueries.blockPatterns).count()
       ()
     }
     // only the tiny (pattern, counts) agg shuffles — never the text

@@ -1761,7 +1761,7 @@ class StorageSpec extends AnyFunSuite {
     import graft.ops.StorageOps
     // the staged five-block slice log (avro + delete + rolled-back
     // poison + command + parquet) through BOTH readers
-    val slice = SparkEntry.stageHudiMorSlice(spark, sf001)
+    val slice = board.LakehouseQueries.stageHudiMorSlice(spark, sf001)
     val logFile = new java.io.File(s"$slice/logs").listFiles()
       .find(_.getName.contains(".log.")).get
     val bytes = java.nio.file.Files.readAllBytes(logFile.toPath)
@@ -1801,8 +1801,8 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("hudi read paths: type gates reject the wrong table; empty incremental delta keeps schema") {
-    val cow = SparkEntry.stageHudiCowTable(spark, sf001)
-    val mor = SparkEntry.stageHudiMorTable(spark, sf001)
+    val cow = board.LakehouseQueries.stageHudiCowTable(spark, sf001)
+    val mor = board.LakehouseQueries.stageHudiMorTable(spark, sf001)
     // category errors reject loudly
     intercept[IllegalArgumentException] {
       StorageOps.hudiIncremental(spark, mor, "0")

@@ -16,7 +16,7 @@ class StreamingWoeSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val schema = spark.read.parquet(s"$dir/lineitem.parquet").schema
     val stream = spark.readStream.schema(schema)
-      .parquet(SparkEntry.stageAsDir(dir, "lineitem"))
+      .parquet(graft.ops.StreamingOps.stageAsDir(dir, "lineitem"))
       .select(SparkEntry.lcgColumns: _*)
       .select("target", "extendedprice")
 
@@ -44,7 +44,7 @@ class StreamingWoeSpec extends AnyFunSuite {
     val edges = (0 to 10).map(_ * 12000.0)
     val schema = spark.read.parquet(s"$dir/lineitem.parquet").schema
     val stream = spark.readStream.schema(schema)
-      .parquet(SparkEntry.stageAsDir(dir, "lineitem"))
+      .parquet(graft.ops.StreamingOps.stageAsDir(dir, "lineitem"))
       .select(SparkEntry.lcgColumns: _*)
       .select("target", "extendedprice")
 
@@ -83,7 +83,7 @@ class StreamingWoeSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val schema = spark.read.parquet(s"$dir/lineitem.parquet").schema
     val stream = spark.readStream.schema(schema)
-      .parquet(SparkEntry.stageAsDir(dir, "lineitem"))
+      .parquet(graft.ops.StreamingOps.stageAsDir(dir, "lineitem"))
       .select(SparkEntry.lcgColumns: _*)
       .select("target", "extendedprice")
     val q = graft.ops.StreamingWoe.fitStream(
