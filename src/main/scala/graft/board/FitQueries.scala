@@ -287,8 +287,8 @@ object FitQueries {
          |FROM base JOIN bins b
          |  ON base.extendedprice > b.lo AND base.extendedprice <= b.hi
          |GROUP BY b.bin_id ORDER BY b.bin_id""".stripMargin),
-    // iterative fit surface — rows-only checks (no SQL equivalent);
-    // correctness pinned by GoldenParitySpec golden fixtures
+    // iterative fit surface (no SQL equivalent): the oracles are literal
+    // tables of reference-captured fits, the fixtures GoldenParitySpec pins
     QuerySpec("q_fit_bins", run = { (s, dir) =>
         val df = lcgFrame(s, dir)
         WoeBinning.fit(df, "target", Seq("extendedprice", "quantity", "discount"),
