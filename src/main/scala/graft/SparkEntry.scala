@@ -36,10 +36,18 @@ object SparkEntry {
     */
   private[graft] def join(families: Seq[QuerySpec]*): Seq[QuerySpec] = {
     val all = families.flatten
-    val dups = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
-    require(dups.isEmpty,
-      s"duplicate query name(s): ${dups.toSeq.sorted.mkString(", ")}")
+    uniqueMap("query name")(all.map(q => q.name -> q): _*)
     all
+  }
+
+  /** `pairs` as a map; throws naming every key that occurs more than
+    * once (a `Map` literal would keep the last one silently).  `what`
+    * names the keys in the message.
+    */
+  private[graft] def uniqueMap[A](what: String)(pairs: (String, A)*): Map[String, A] = {
+    val dups = pairs.groupBy(_._1).collect { case (k, ps) if ps.size > 1 => k }
+    require(dups.isEmpty, s"duplicate $what(s): ${dups.toSeq.sorted.mkString(", ")}")
+    pairs.toMap
   }
 
   private lazy val byName: Map[String, QuerySpec] =
@@ -265,7 +273,7 @@ object SparkEntry {
       .agg(count_distinct(col("gh")).as("n"))
   }
 
-  def abVariants: Map[String, AbVariant] = Map(
+  def abVariants: Map[String, AbVariant] = uniqueMap("comparison")(
     // r12 change 1: the hot-band auto-salt default.
     // A = the new default (salt on at 2^13); B = the r11 default (off).
     // Identical pair sets (spec-pinned), so the delta is pure plan cost.
@@ -347,7 +355,7 @@ object SparkEntry {
     // Results differ only at bucket edges (documented semantics knob),
     // so this record is a COST comparison; the exact path stays the
     // oracle default.
-    "selection_approx_buckets" -> AbVariant(
+    "selection_pipeline_approx_buckets" -> AbVariant(
       "approxCutpoints=true(100TB path)",
       (s, dir) => SelectionOps.selectionPipeline(
         s.read.parquet(s"$dir/documents.parquet"),

@@ -21,10 +21,7 @@ object LakehouseQueries {
     */
   private[graft] def stageDeltaLog(dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val key = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + md
-      val staged = java.nio.file.Paths.get("/tmp/graft-stream", key, "deltalog")
+      val staged = StreamingOps.streamStageDir(dir, "deltalog")
       java.nio.file.Files.createDirectories(staged)
       (0 until 12).foreach { v =>
         val lines = Seq.newBuilder[String]
@@ -52,11 +49,7 @@ object LakehouseQueries {
     */
   private[graft] def stageDeltaLogMapped(dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val key = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + md
-      val staged =
-        java.nio.file.Paths.get("/tmp/graft-stream", key, "deltalogmap")
+      val staged = StreamingOps.streamStageDir(dir, "deltalogmap")
       java.nio.file.Files.createDirectories(staged)
       def esc(s: String): String =
         s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -105,8 +98,7 @@ object LakehouseQueries {
     */
   private[graft] def stageIcebergManifestV2(s: SparkSession, dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val md = StreamingOps.dirKey(dir)
       val out = s"/tmp/graft-icebergv2-stage-$md"
       val fp = stageFingerprint(s, dir, Seq("documents"), "icebergv2-v5")
       if (!stageUpToDate(out, fp)) {
@@ -171,15 +163,12 @@ object LakehouseQueries {
   private def stageDeltaLogCheckpointedImpl(
       s: SparkSession, dir: String, parts: Int): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val key = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + md
       val sub = parts match {
         case 1 => "deltalogcp"
         case 0 => "deltalogcpv2"
         case n => s"deltalogcp$n"
       }
-      val staged = java.nio.file.Paths.get("/tmp/graft-stream", key, sub)
+      val staged = StreamingOps.streamStageDir(dir, sub)
       java.nio.file.Files.createDirectories(staged)
       (0 until 12).foreach { v =>
         val lines = Seq.newBuilder[String]
@@ -284,10 +273,7 @@ object LakehouseQueries {
     */
   private[graft] def stageHudiTableRoot(dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val key = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + md
-      val root = java.nio.file.Paths.get("/tmp/graft-stream", key, "hudiroot")
+      val root = StreamingOps.streamStageDir(dir, "hudiroot")
       java.nio.file.Files.createDirectories(root.resolve(".hoodie"))
       val props = new java.util.Properties()
       props.setProperty("hoodie.table.name", "graft_events")
@@ -315,10 +301,7 @@ object LakehouseQueries {
     */
   private[graft] def stageHudiTimeline(dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val key = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + md
-      val staged = java.nio.file.Paths.get("/tmp/graft-stream", key, "hooditl")
+      val staged = StreamingOps.streamStageDir(dir, "hooditl")
       java.nio.file.Files.createDirectories(staged)
       (0 until 10).foreach { t =>
         val instant = 20240100 + t
@@ -376,8 +359,7 @@ object LakehouseQueries {
     */
   private[graft] def stageHudiCowTable(s: SparkSession, dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val md = StreamingOps.dirKey(dir)
       val out = s"/tmp/graft-hudicow-stage-$md"
       val fp = stageFingerprint(s, dir, Seq("orders"), "hudicow-v2")
       if (!stageUpToDate(out, fp)) {
@@ -569,8 +551,7 @@ object LakehouseQueries {
     */
   private[graft] def stageHudiMorSlice(s: SparkSession, dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val md = StreamingOps.dirKey(dir)
       val out = s"/tmp/graft-hudimor-stage-$md"
       val fp = stageFingerprint(s, dir, Seq("orders"), "hudimor-v4")
       if (!stageUpToDate(out, fp)) {
@@ -605,8 +586,7 @@ object LakehouseQueries {
     */
   private[graft] def stageHudiArchive(dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val md = StreamingOps.dirKey(dir)
       val out = java.nio.file.Paths.get(s"/tmp/graft-hudiarch-stage-$md")
       java.nio.file.Files.createDirectories(out)
       val schema =
@@ -636,8 +616,7 @@ object LakehouseQueries {
     */
   private[graft] def stageHudiMorTable(s: SparkSession, dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val md = StreamingOps.dirKey(dir)
       val out = s"/tmp/graft-hudimortbl-stage-$md"
       val fp = stageFingerprint(s, dir, Seq("orders"), "hudimortbl-v2")
       if (!stageUpToDate(out, fp)) {

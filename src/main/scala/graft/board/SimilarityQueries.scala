@@ -3,7 +3,7 @@ package board
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.SimilarityOps
+import graft.ops.{SimilarityOps, StreamingOps}
 import SparkEntry._
 
 /** Embedding similarity rows: exact and approximate top-k (IVF, PQ,
@@ -622,8 +622,7 @@ object SimilarityQueries {
         val emb = s.read.parquet(s"$dir/embeddings.parquet")
         val cents = SimilarityOps.deterministicCentroids(
           emb, "vec_id", "embedding", nCells = 16, sampleN = 256, iters = 10)
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+        val key = StreamingOps.dirKey(dir)
         val idx = s"/tmp/graft-ivf-index/$key"
         BuildOnce.once(s"ivf-index|$idx") {
           SimilarityOps.saveIvfIndex(emb, "vec_id", "embedding", cents, idx)
@@ -775,8 +774,7 @@ object SimilarityQueries {
         val emb = s.read.parquet(s"$dir/embeddings.parquet")
         val cents = SimilarityOps.deterministicCentroids(
           emb, "vec_id", "embedding", nCells = 16, sampleN = 256, iters = 10)
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+        val key = StreamingOps.dirKey(dir)
         val idx = s"/tmp/graft-ivf-incr/$key"
         // base build + delta append memoize as ONE unit: replaying the
         // append without the overwrite would duplicate the delta rows
@@ -835,8 +833,7 @@ object SimilarityQueries {
           emb, "vec_id", "embedding", nCells = 16, sampleN = 256, iters = 10)
         val cbs = SimilarityOps.pqCodebooks(
           emb, "vec_id", "embedding", m = 8, ksub = 16, sampleN = 256, iters = 10)
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+        val key = StreamingOps.dirKey(dir)
         val idx = s"/tmp/graft-ivfpq-index/$key"
         BuildOnce.once(s"ivfpq-index|$idx") {
           SimilarityOps.saveIvfPqIndex(emb, "vec_id", "embedding", cents, cbs, idx)
@@ -862,8 +859,7 @@ object SimilarityQueries {
           emb, "vec_id", "embedding", nCells = 16, sampleN = 256, iters = 10)
         val cbs = SimilarityOps.pqCodebooks(
           emb, "vec_id", "embedding", m = 8, ksub = 16, sampleN = 256, iters = 10)
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+        val key = StreamingOps.dirKey(dir)
         val codeIdx = s"/tmp/graft-ivfpq-index/$key"
         val floatIdx = s"/tmp/graft-ivf-index/$key"
         BuildOnce.once(s"ivfpq-index|$codeIdx") {

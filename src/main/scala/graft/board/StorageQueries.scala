@@ -80,8 +80,7 @@ object StorageQueries {
     */
   private[graft] def stageOrcRowIndexFiles(s: SparkSession, dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val md = StreamingOps.dirKey(dir)
       val out = s"/tmp/graft-orcridx-stage-$md"
       val fp = stageFingerprint(s, dir, Seq("orders"), "orcridx-v3")
       if (!stageUpToDate(out, fp)) {
@@ -131,6 +130,12 @@ object StorageQueries {
       out
     }
 
+  /** Where [[stageParquetIdxFiles]] writes corpus dir `dir`'s tables,
+    * which its two oracles read.
+    */
+  private def parquetIdxStageDir(dir: String): String =
+    s"/tmp/graft-pqidx-stage-${StreamingOps.dirKey(dir)}"
+
   /** Stage a parquet-mr re-write of three tables: parquet-mr writes
     * ColumnIndex/OffsetIndex structures by default (the testdata
     * corpus, written by another engine, carries none), so the
@@ -139,9 +144,7 @@ object StorageQueries {
     */
   private[graft] def stageParquetIdxFiles(s: SparkSession, dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val out = s"/tmp/graft-pqidx-stage-$md"
+      val out = parquetIdxStageDir(dir)
       val tables = Seq("documents", "lineitem", "orders")
       val fp = stageFingerprint(s, dir, tables, "pqidx-v1")
       if (!stageUpToDate(out, fp)) {
@@ -160,8 +163,7 @@ object StorageQueries {
     */
   private[graft] def stageParquetBloomFiles(s: SparkSession, dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val md = StreamingOps.dirKey(dir)
       val out = s"/tmp/graft-pqbloom-stage-$md"
       val fp = stageFingerprint(s, dir, Seq("orders"), "pqbloom-v1")
       if (!stageUpToDate(out, fp)) {
@@ -185,8 +187,7 @@ object StorageQueries {
     */
   private[graft] def stageOrcFiles(s: SparkSession, dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      val md = StreamingOps.dirKey(dir)
       val out = s"/tmp/graft-orc-stage-$md"
       val tables = Seq("region", "nation", "supplier")
       val fp = stageFingerprint(s, dir, tables, "orc-v1")
@@ -321,10 +322,7 @@ object StorageQueries {
     * so both readers agree regardless of thrift list order.
     */
   private def parquetEncodingsOracleSql(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(8)
-    val staged = s"/tmp/graft-pqidx-stage-$md"
+    val staged = parquetIdxStageDir(dir)
     Seq("documents", "lineitem", "orders").map { t =>
       s"""SELECT regexp_extract(file_name, '[^/]+$$') AS file_name,
          |       CAST(row_group_id AS BIGINT) AS row_group_id,
@@ -344,13 +342,10 @@ object StorageQueries {
     * over the STAGED parquet-mr files (the ones actually carrying
     * page indexes) — the page-index rows aggregated to chunks must
     * reproduce them exactly.  The staged dir is a pure function of
-    * the corpus dir, recomputed here from it.
+    * the corpus dir ([[parquetIdxStageDir]]).
     */
   private def parquetPageStatsOracleSql(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_))
-      .mkString.take(8)
-    val staged = s"/tmp/graft-pqidx-stage-$md"
+    val staged = parquetIdxStageDir(dir)
     val cols = Seq("doc_id", "l_orderkey", "l_partkey", "l_suppkey",
       "l_linenumber", "o_orderkey", "o_custkey")
       .map(c => s"'$c'").mkString(", ")
@@ -603,8 +598,7 @@ object StorageQueries {
         // store hash-equals the oracle's from-scratch rebuild of the
         // filtered corpus
         val docs = s.read.parquet(s"$dir/documents.parquet")
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+        val key = StreamingOps.dirKey(dir)
         val store = s"/tmp/graft-exact-store/$key"
         BuildOnce.once(s"exact-store|$store") {
           graft.ops.IncrementalDedup.writeExactStore(docs, "text", "doc_id", store)
@@ -1126,8 +1120,7 @@ object StorageQueries {
         // the DataSource V2 connector end-to-end: shard the corpus
         // once (BuildOnce), read through the connector with a pushed
         // doc_id bound, fingerprint the decoded text
-        val key = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+        val key = StreamingOps.dirKey(dir)
         val store = s"/tmp/graft-gdoc-store/$key"
         BuildOnce.once(s"gdoc|$store") {
           graft.sources.GraftDoc.write(

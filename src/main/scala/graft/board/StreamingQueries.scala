@@ -54,10 +54,7 @@ object StreamingQueries {
     */
   private[graft] def stageShardFiles(s: SparkSession, dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val key = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + md
-      val staged = java.nio.file.Paths.get("/tmp/graft-stream", key, "tarshards")
+      val staged = StreamingOps.streamStageDir(dir, "tarshards")
       java.nio.file.Files.createDirectories(staged)
       // idempotent: the landing zone is a pure function of the (static)
       // documents table, so if the CONTENT fingerprint already matches,
@@ -112,10 +109,7 @@ object StreamingQueries {
     */
   private[graft] def stageWarcGzFiles(s: SparkSession, dir: String): String =
     StreamingOps.stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val key = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + md
-      val staged = java.nio.file.Paths.get("/tmp/graft-stream", key, "warcshards")
+      val staged = StreamingOps.streamStageDir(dir, "warcshards")
       java.nio.file.Files.createDirectories(staged)
       val docs = s.read.parquet(s"$dir/documents.parquet")
       val fpRow = docs.agg(

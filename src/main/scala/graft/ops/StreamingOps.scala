@@ -27,19 +27,31 @@ object StreamingOps {
     */
   private[graft] val stageLock = new Object
 
+  /** The first 8 hex digits of the md5 of corpus dir `dir`: the key of
+    * every per-corpus scratch dir under /tmp, so that two corpora never
+    * share one.
+    */
+  private[graft] def dirKey(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+
+  /** Corpus dir `dir`'s staging dir `sub` under /tmp/graft-stream, keyed
+    * by the sanitized path PLUS its [[dirKey]] (sanitization alone can
+    * collide: "sf-1" vs "sf_1").
+    */
+  private[graft] def streamStageDir(dir: String, sub: String): java.nio.file.Path =
+    java.nio.file.Paths.get("/tmp/graft-stream",
+      dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + dirKey(dir), sub)
+
   /** Stage a single-file table behind a directory symlink (file-stream
-    * sources require a directory).  Keyed by sanitized path PLUS an
-    * md5 suffix (sanitization alone can collide: "sf-1" vs "sf_1");
-    * the symlink is re-created under a lock so a dangling link cannot
+    * sources require a directory) in its [[streamStageDir]].  The
+    * symlink is re-created under a lock so a dangling link cannot
     * poison later runs and concurrent suites cannot interleave the
     * delete/create pair.
     */
   private[graft] def stageAsDir(dir: String, table: String): String =
     stageLock.synchronized {
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val key = dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + md
-      val staged = java.nio.file.Paths.get("/tmp/graft-stream", key, table)
+      val staged = streamStageDir(dir, table)
       java.nio.file.Files.createDirectories(staged)
       val link = staged.resolve(s"$table.parquet")
       java.nio.file.Files.deleteIfExists(link)

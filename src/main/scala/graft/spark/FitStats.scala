@@ -1,10 +1,13 @@
 package graft.spark
 
 import graft.core.Kernels
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable.ArrayBuffer
+import scala.collection.parallel.CollectionConverters._
 import scala.jdk.CollectionConverters._
 
 /** One variable's non-missing values as sorted runs: ascending distinct
@@ -40,40 +43,89 @@ private[graft] final class StatsRuns(
     out.result()
   }
 
-  private def writeReplace(): AnyRef =
-    new StatsRuns.Wire(values, StatsRuns.narrow(counts), StatsRuns.narrow(tsums))
+  private def writeReplace(): AnyRef = StatsRuns.Wire.of(this)
 }
 
 private[graft] object StatsRuns {
   def empty(hasTarget: Boolean): StatsRuns = new StatsRuns(Array.emptyDoubleArray,
     Array.emptyLongArray, if (hasTarget) Array.emptyLongArray else null)
 
-  /** The serialized form of [[StatsRuns]], in a task result or a
-    * `treeReduce` shuffle: counts and target sums as ints when every one
-    * fits (as in any partition under 2^31 rows), so a run ships in 12
-    * bytes, 16 with a target, instead of 16 and 24.
+  /** A value's order-preserving 64-bit key, compared unsigned: its bits
+    * with the sign bit flipped, or every bit flipped for a negative value.
     */
-  private final class Wire(values: Array[Double], counts: AnyRef, tsums: AnyRef)
-      extends Serializable {
-    private def readResolve(): AnyRef = new StatsRuns(values, widen(counts), widen(tsums))
+  @inline private def key(v: Double): Long = {
+    val bits = java.lang.Double.doubleToRawLongBits(v)
+    bits ^ ((bits >> 63) | Long.MinValue)
   }
 
-  private def narrow(a: Array[Long]): AnyRef =
-    if (a == null) null
-    else {
-      val n = new Array[Int](a.length)
-      var i = 0
-      while (i < a.length && a(i) <= Int.MaxValue) { n(i) = a(i).toInt; i += 1 }
-      if (i == a.length) n else a
-    }
+  @inline private def value(key: Long): Double =
+    java.lang.Double.longBitsToDouble(key ^ ((~key >> 63) | Long.MinValue))
 
-  private def widen(a: AnyRef): Array[Long] = a match {
-    case n: Array[Int] =>
-      val w = new Array[Long](n.length)
+  /** A balanced pairwise merge of `rs` (at least one): each run is
+    * merged O(log rs.length) times, not up to rs.length times as in a
+    * left fold.
+    */
+  def mergeAll(rs: IndexedSeq[StatsRuns]): StatsRuns = {
+    var level = rs
+    while (level.length > 1)
+      level = IndexedSeq.tabulate((level.length + 1) / 2)(i =>
+        if (2 * i + 1 < level.length) level(2 * i).merge(level(2 * i + 1)) else level(2 * i))
+    level.head
+  }
+
+  /** The serialized form of [[StatsRuns]], in a task result or a
+    * shuffle: per run, as unsigned LEB128 varints, the difference of its
+    * value's [[key]] from the previous run's (mod 2^64, from 0 for the
+    * first), its count and, with a target, its target sum.  Ascending
+    * runs have small key steps and counts, so a run of a near-unique
+    * column ships in about 8 bytes instead of the 24 of its arrays.
+    * Every value, count and sum round-trips exactly.
+    */
+  private final class Wire(n: Int, hasTarget: Boolean, bytes: Array[Byte]) extends Serializable {
+    private def readResolve(): AnyRef = {
+      val out = new Builder(n, hasTarget)
+      var at = 0
+      def next(): Long = {
+        var x = 0L; var shift = 0; var b = 0x80
+        while ((b & 0x80) != 0) {
+          b = bytes(at); at += 1
+          x |= (b & 0x7fL) << shift; shift += 7
+        }
+        x
+      }
+      var k = 0L
       var i = 0
-      while (i < n.length) { w(i) = n(i); i += 1 }
-      w
-    case w => w.asInstanceOf[Array[Long]] // null without a target
+      while (i < n) {
+        k += next()
+        val c = next()
+        out.add(value(k), c, if (hasTarget) next() else 0L)
+        i += 1
+      }
+      out.result()
+    }
+  }
+
+  private object Wire {
+    def of(r: StatsRuns): Wire = {
+      val perRun = if (r.hasTarget) 30 else 20 // at most 10 bytes a varint
+      val bytes = new Array[Byte](r.size * perRun)
+      var at = 0
+      def put(v: Long): Unit = {
+        var x = v
+        while ((x & ~0x7fL) != 0) { bytes(at) = ((x & 0x7f) | 0x80).toByte; at += 1; x >>>= 7 }
+        bytes(at) = x.toByte; at += 1
+      }
+      var prev = 0L
+      var i = 0
+      while (i < r.size) {
+        val k = key(r.values(i))
+        put(k - prev); put(r.counts(i))
+        if (r.hasTarget) put(r.tsums(i))
+        prev = k
+        i += 1
+      }
+      new Wire(r.size, r.hasTarget, java.util.Arrays.copyOf(bytes, at))
+    }
   }
 
   /** Appends runs in ascending value order into arrays of `capacity`. */
@@ -116,13 +168,12 @@ private[graft] object StatsRuns {
     * (NaN-free, −0.0 already folded to 0.0) and `ones(i)` is 1 when row
     * `i`'s target is 1 (`ones` null for a counts-only pass).
     *
-    * Each value maps to an order-preserving 64-bit key (its bits with the
-    * sign bit flipped, or every bit flipped for a negative value),
-    * compared unsigned.  An LSD radix sort over the key's 8 bytes carries
-    * each row's target bit along, and skips a byte whose one bucket holds
-    * the whole block.  Equal keys are equal values, so a run-length pass
-    * over the sorted keys counts each value's rows and sums their bits.
-    * `vals` is not modified.
+    * Each value maps to its order-preserving 64-bit [[key]].  An LSD
+    * radix sort over the key's 8 bytes carries each row's target bit
+    * along, and skips a byte whose one bucket holds the whole block.
+    * Equal keys are equal values, so a run-length pass over the sorted
+    * keys counts each value's rows and sums their bits.  `vals` is not
+    * modified.
     */
   def encode(vals: Array[Double], ones: Array[Byte], n: Int, s: Scratch): StatsRuns = {
     s.ensure(n)
@@ -133,8 +184,7 @@ private[graft] object StatsRuns {
     java.util.Arrays.fill(hist, 0)
     var i = 0
     while (i < n) {
-      val bits = java.lang.Double.doubleToRawLongBits(vals(i))
-      val key = bits ^ ((bits >> 63) | Long.MinValue)
+      val key = StatsRuns.key(vals(i))
       src(i) = key
       var d = 0
       while (d < 8) { hist((d << 8) | ((key >>> (d << 3)).toInt & 0xff)) += 1; d += 1 }
@@ -173,7 +223,7 @@ private[graft] object StatsRuns {
       val start = i
       var t = 0L
       while (i < n && src(i) == key) { if (hasTarget) t += srcOnes(i); i += 1 }
-      out.add(java.lang.Double.longBitsToDouble(key ^ ((~key >> 63) | Long.MinValue)), i - start, t)
+      out.add(value(key), i - start, t)
     }
     out.result()
   }
@@ -237,10 +287,10 @@ private[graft] object FitStats {
   /** The stats of `inputCols` against `targetCol` over `df` in one
     * narrow job (the pass the `WoeBinning` scaladoc describes): each
     * variable's block is sorted once, by [[StatsRuns.encode]]'s radix
-    * pass, and folded into the task's runs.
-    * `treeReduce` rather than a driver fold keeps the driver's fan-in
-    * and `spark.driver.maxResultSize` bounded when there are many
-    * partitions.  Semantics match the grouped
+    * pass, and folded into the task's runs.  The tasks' runs reach the
+    * driver in one stage ([[gather]]); a shuffle level above
+    * [[DirectFanIn]] partitions keeps the driver's fan-in and
+    * `spark.driver.maxResultSize` bounded.  Semantics match the grouped
     * `WoeBinning.statsAggregation`: NaN and null values are missing,
     * −0.0 counts as 0.0 (as Spark's grouping key normalisation does),
     * and a target outside {0, 1} or null is recorded for the driver to
@@ -268,14 +318,63 @@ private[graft] object FitStats {
   private def mergeInto(acc: Map[String, FitStats], seg: (String, FitStats)) =
     acc.updated(seg._1, acc.get(seg._1).fold(seg._2)(_ merge seg._2))
 
-  /** The one pass over rows of (feature..., target?, segment?): per
-    * segment key, the stats of its rows (every row under `""` without a
-    * `groupCol`; rows of a null segment are skipped).  A task keeps one
-    * [[PartitionBuilder]] per segment, all sharing one radix
-    * [[StatsRuns.Scratch]]; `treeReduce` merges key by key.
+  /** Most per-partition results [[gather]] collects as they are; above
+    * it, one executor level first merges them to ⌈√n⌉.
     */
+  val DirectFanIn: Int = 32
+
+  /** The one pass: [[partials]], then [[gather]]. */
   private def pass(df: DataFrame, targetCol: Option[String], inputCols: Seq[String],
-      groupCol: Option[String]): Map[String, FitStats] = {
+      groupCol: Option[String]): Map[String, FitStats] =
+    gather(partials(df, targetCol, inputCols, groupCol))
+
+  /** The merged stats of `parts` (one element each), in one job: up to
+    * [[DirectFanIn]] partitions, the driver collects every task's
+    * result; above that, one shuffle level, as `treeReduce` runs, first
+    * merges them into ⌈√n⌉ tasks' results.  No result is folded as it
+    * arrives, on the scheduler's thread: the driver merges each
+    * segment's runs of each variable in parallel ([[mergeSegments]]).
+    */
+  private[graft] def gather(parts: RDD[Map[String, FitStats]]): Map[String, FitStats] = {
+    val n = parts.getNumPartitions
+    if (n == 0) Map.empty
+    else if (n <= DirectFanIn) mergeSegments(parts.collect())
+    else {
+      val s = math.ceil(math.sqrt(n.toDouble)).toInt
+      mergeSegments(parts.mapPartitionsWithIndex((i, it) => it.map(i % s -> _))
+        .reduceByKey(new HashPartitioner(s), _.foldLeft(_)(mergeInto)).values.collect())
+    }
+  }
+
+  /** Merges per-task stats segment by segment: every (segment,
+    * variable) pair's runs in parallel, each by a balanced pairwise
+    * [[StatsRuns.mergeAll]]; the counts and target texts alongside.
+    */
+  private def mergeSegments(parts: Array[Map[String, FitStats]]): Map[String, FitStats] = {
+    val segments = parts.iterator.flatMap(_.iterator).toVector.groupMap(_._1)(_._2).toVector
+    if (segments.isEmpty) return Map.empty
+    val k = segments.head._2.head.runs.length
+    val runs = new Array[StatsRuns](segments.length * k)
+    (0 until runs.length).par.foreach { t =>
+      runs(t) = StatsRuns.mergeAll(segments(t / k)._2.map(_.runs(t % k)))
+    }
+    segments.indices.map { g =>
+      val (key, fs) = segments(g)
+      def sum(f: FitStats => Array[Long]) = Array.tabulate(k)(j => fs.iterator.map(f(_)(j)).sum)
+      key -> new FitStats(runs.slice(g * k, g * k + k), sum(_.missing), sum(_.missingTsum),
+        fs.iterator.map(_.rows).sum, fs.flatMap(_.badTarget).minOption,
+        fs.flatMap(_.nullTarget).minOption)
+    }.toMap
+  }
+
+  /** The pass over rows of (feature..., target?, segment?), one element
+    * per partition: per segment key, the stats of the partition's rows
+    * (every row under `""` without a `groupCol`; rows of a null segment
+    * are skipped).  A task keeps one [[PartitionBuilder]] per segment,
+    * all sharing one radix [[StatsRuns.Scratch]].
+    */
+  private[graft] def partials(df: DataFrame, targetCol: Option[String], inputCols: Seq[String],
+      groupCol: Option[String]): RDD[Map[String, FitStats]] = {
     require(inputCols.nonEmpty, "woe_binning: no feature columns to fit")
     val names = inputCols.toArray
     val seg = if (groupCol.isEmpty) -1 else names.length + targetCol.size
@@ -283,7 +382,7 @@ private[graft] object FitStats {
       (inputCols ++ targetCol).map(c => s"cast(${WoeBinning.sqlId(c)} as double)") ++
         groupCol.map(g => s"cast(${WoeBinning.sqlId(g)} as string)"): _*)
       .queryExecution.toRdd
-    val parts = rows.mapPartitions { it =>
+    rows.mapPartitions { it =>
       val segments = new java.util.HashMap[UTF8String, PartitionBuilder]
       val scratch = new StatsRuns.Scratch
       var buffered = 0
@@ -305,7 +404,6 @@ private[graft] object FitStats {
       Iterator.single(segments.asScala.iterator.map { case (g, b) => g.toString -> b.result() }
         .foldLeft(Map.empty[String, FitStats])(mergeInto))
     }
-    if (parts.partitions.isEmpty) Map.empty else parts.treeReduce(_.foldLeft(_)(mergeInto))
   }
 
   /** One variable's block buffer: its non-missing values and, with a

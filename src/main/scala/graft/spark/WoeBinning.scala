@@ -40,10 +40,12 @@ final case class WoeFitOptions(
   * and carrying the target bit, orders the block; a run-length pass
   * turns it into sorted (value, count, Σtarget) runs plus a missing
   * bucket.  Each block folds into the task's runs with a sorted merge
-  * that adds the counts of equal values; `treeReduce` merges the tasks'
-  * runs the same way.  There is no melt and no shuffle of the data, and
-  * the driver decodes no rows: the kernels read each variable's run
-  * arrays as they arrive.  A task returns O(partition distinct) values
+  * that adds the counts of equal values.  The tasks' runs ship as
+  * varints and reach the driver in one stage (above 32 partitions, one
+  * shuffle level first merges them to about √partitions results), where
+  * each variable's runs are merged in parallel, pairwise, the same way.
+  * There is no melt and no shuffle of the data, and the driver decodes
+  * no rows: the kernels read each variable's merged run arrays.  A task returns O(partition distinct) values
   * per variable, so the collect is bounded by distinct values, not rows.
   *
   * This replaces the reference's per-column process fan-out that

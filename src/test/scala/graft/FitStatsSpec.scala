@@ -2,6 +2,7 @@ package graft
 
 import java.lang.Double.doubleToLongBits
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,7 +18,8 @@ import graft.spark.{FitStats, StatsRuns, WoeBinning, WoeFitOptions}
   * per-segment form (`FitStats.bySegment`, which `fitByGroup` reads)
   * equals the pass over each filtered segment the same way.  Its block
   * encode (`StatsRuns.encode`, one radix sort) equals the two-sort
-  * encode it replaced, kept here as the oracle.
+  * encode it replaced, kept here as the oracle, and its one-stage
+  * gather equals the `treeReduce` fold it replaced, also kept here.
   *
   * Frames come from ScalaCheck generators run on fixed seeds; a failure
   * names its seed.  Cells mix −0.0 next to 0.0, NaN and null, ±inf,
@@ -159,7 +161,7 @@ class FitStatsSpec extends AnyFunSuite {
     assert(cov.subnormal > 0 && cov.minPositive > 0, cov)
   }
 
-  test("runs round-trip through serialization: counts as ints when they fit, as longs otherwise") {
+  test("runs round-trip through serialization as varint runs") {
     def roundTrip(r: StatsRuns): (StatsRuns, Int) = {
       val bytes = new java.io.ByteArrayOutputStream
       val out = new java.io.ObjectOutputStream(bytes)
@@ -171,21 +173,86 @@ class FitStatsSpec extends AnyFunSuite {
     val values = Array.tabulate(n)(i => i * 0.5 - 7.0)
     val counts = Array.tabulate(n)(i => 1L + i % 3)
     val tsums = Array.tabulate(n)(i => (i % 2).toLong)
+    // every edge of the value order, each next to its neighbours
+    val edges = (Seq(Double.NegativeInfinity, -Double.MaxValue, Math.nextUp(-Double.MaxValue),
+      -1.0, -java.lang.Double.MIN_NORMAL, -java.lang.Double.MIN_NORMAL / 3,
+      -Double.MinPositiveValue, 0.0, Double.MinPositiveValue, java.lang.Double.MIN_NORMAL / 7,
+      Math.nextDown(java.lang.Double.MIN_NORMAL), java.lang.Double.MIN_NORMAL, 1.0,
+      Math.nextDown(Double.MaxValue), Double.MaxValue, Double.PositiveInfinity)).toArray
+    val edgeCounts = Array.tabulate(edges.length)(i => if (i % 2 == 0) Long.MaxValue else 1L + i)
+    val edgeTsums = Array.tabulate(edges.length)(i => if (i % 3 == 0) Long.MaxValue else i.toLong)
+    // per-run byte bounds: most key steps of `values` take 6 varint
+    // bytes (up to 9 near zero), a count or target sum under 128 one,
+    // and any long at most 10
     val cases = Seq(
-      ("with a target", new StatsRuns(values, counts, tsums), 16),
-      ("counts only", new StatsRuns(values, counts, null), 12),
-      ("a count over Int.MaxValue", new StatsRuns(values, counts.updated(7, 1L << 40), tsums), 20),
+      ("with a target", new StatsRuns(values, counts, tsums), 9),
+      ("counts only", new StatsRuns(values, counts, null), 8),
+      ("a count over Int.MaxValue", new StatsRuns(values, counts.updated(7, 1L << 40), tsums), 9),
       ("a target sum over Int.MaxValue", new StatsRuns(values, counts.updated(7, 1L << 40),
-        tsums.updated(7, 1L << 35)), 24),
-      ("empty", StatsRuns.empty(true), 0))
+        tsums.updated(7, 1L << 35)), 9),
+      ("±inf, ±Double.MaxValue, subnormals, counts and sums up to Long.MaxValue",
+        new StatsRuns(edges, edgeCounts, edgeTsums), 30),
+      ("the same edges, counts only", new StatsRuns(edges, edgeCounts, null), 20),
+      ("empty", StatsRuns.empty(true), 0),
+      ("empty, counts only", StatsRuns.empty(false), 0))
     def plain(r: StatsRuns) =
       (r.values.map(doubleToLongBits).toSeq, r.counts.toSeq, Option(r.tsums).map(_.toSeq))
     for ((what, r, perRun) <- cases) {
       val (back, size) = roundTrip(r)
       assert(plain(back) == plain(r), what)
+      assert(back.hasTarget == r.hasTarget, what)
       // the stream frames its data in 1 kB blocks of 5-byte headers
       assert(size.toLong <= perRun.toLong * r.size * 1005 / 1000 + 1024, s"$what: $size bytes")
     }
+    // a near-unique column's runs ship in about a third of their array bytes
+    val (_, size) = roundTrip(new StatsRuns(values, counts, tsums))
+    assert(size < 24 * n / 2, s"$size bytes for $n runs")
+  }
+
+  test("one-stage gather == the treeReduce fold it replaced, bit for bit (1 to 200 partitions)") {
+    // the old driver path: `treeReduce` of the per-partition maps, each
+    // merge folding segment by segment
+    def treeReduceFold(parts: RDD[Map[String, FitStats]]): Map[String, FitStats] =
+      if (parts.partitions.isEmpty) Map.empty
+      else parts.treeReduce((a, b) => b.foldLeft(a) { case (acc, (g, s)) =>
+        acc.updated(g, acc.get(g).fold(s)(_ merge s)) })
+    def plain(m: Map[String, FitStats]) = m.map { case (g, s) =>
+      g -> (s.runs.toSeq.map(r => (r.values.map(doubleToLongBits).toSeq, r.counts.toSeq,
+          Option(r.tsums).map(_.toSeq))), s.missing.toSeq, s.missingTsum.toSeq, s.rows,
+        s.badTarget, s.nullTarget)
+    }
+    // x near-unique, y few values with NaN, null, −0.0 and ±inf; some
+    // bad and null targets; a segment with nulls
+    def ranged(p: Int) = spark.range(0, 12000, 1, p).select(
+      (col("id") * 7919 % 12007 * 0.25).as("x"),
+      when(col("id") % 11 === 0, lit(Double.NaN)).when(col("id") % 13 === 0, lit(null))
+        .when(col("id") % 17 === 0, lit(-0.0)).when(col("id") % 19 === 0, lit(Double.PositiveInfinity))
+        .otherwise(col("id") % 7 - 3.0).as("y"),
+      when(col("id") === 4321, lit(null)).when(col("id") === 8765, lit(2.0))
+        .otherwise(((col("id") * 31) % 5 < 2).cast("double")).as("target"),
+      when(col("id") % 23 === 0, lit(null)).otherwise((col("id") * 13 % 5).cast("string")).as("seg"))
+    var modes = Set.empty[String]
+    for (p <- Seq(1, 4, 8, 32, 33, 64, 200)) {
+      val t = genTrial.pureApply(Gen.Parameters.default, Seed(p.toLong))
+      val frames = Seq("ranged" -> (ranged(p), Seq("x", "y")),
+        "generated" -> (frame(t.copy(partitions = p, reshape = AsIs)), t.cols.indices.map(i => s"c$i")))
+      for ((kind, (df, cols)) <- frames) {
+        val passes = Seq(
+          "with a target" -> FitStats.partials(df, Some("target"), cols, None),
+          "counts only" -> FitStats.partials(df, None, cols, None)) ++
+          (if (kind == "ranged") Seq("bySegment" -> FitStats.partials(df, Some("target"), cols,
+            Some("seg"))) else Nil)
+        for ((mode, parts) <- passes) {
+          assert(parts.getNumPartitions == p, s"$p partitions, $kind, $mode")
+          val got = plain(FitStats.gather(parts))
+          val want = plain(treeReduceFold(parts))
+          assert(got == want, s"$p partitions, $kind, $mode")
+          assert(kind == "generated" && t.target.isEmpty || got.nonEmpty, s"$p, $kind, $mode")
+          modes += mode
+        }
+      }
+    }
+    assert(modes == Set("with a target", "counts only", "bySegment"), modes)
   }
 
   test("fit with sepValue or maxDistinct == fit over the grouped aggregation") {

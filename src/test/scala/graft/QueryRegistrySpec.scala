@@ -33,6 +33,25 @@ class QueryRegistrySpec extends AnyFunSuite {
     assert(SparkEntry.join(Seq(a), Seq(b)).map(_.name) == Seq("q_a", "q_b"))
   }
 
+  test("abVariants keeps every comparison, and a duplicate key throws naming it") {
+    // the r13 selection-pipeline arm and the r14 perplexity-bucket arm
+    // once shared one key, so the Map literal dropped the r13 one
+    val keys = SparkEntry.abVariants.keySet
+    assert(keys.contains("selection_pipeline_approx_buckets") &&
+      keys.contains("selection_approx_buckets"), keys)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.uniqueMap("comparison")("a" -> 1, "b" -> 2, "a" -> 3))
+    assert(e.getMessage == "requirement failed: duplicate comparison(s): a", e.getMessage)
+    assert(SparkEntry.uniqueMap("comparison")("a" -> 1, "b" -> 2) == Map("a" -> 1, "b" -> 2))
+  }
+
+  test("the parquet page-index oracles read the dir its stager keys by the corpus dir") {
+    val staged = s"/tmp/graft-pqidx-stage-${graft.ops.StreamingOps.dirKey(dir)}/"
+    for (q <- Seq("q_parquet_page_stats", "q_parquet_encodings"))
+      assert(SparkEntry.query(q).oracle(dir).contains(staged), q)
+    assert(graft.ops.StreamingOps.dirKey(dir) != graft.ops.StreamingOps.dirKey(otherDir))
+  }
+
   test("every record's oracle is non-empty SQL") {
     val empty = SparkEntry.queries.filter(_.oracle(dir).trim.isEmpty).map(_.name)
     assert(empty.isEmpty, empty.mkString(", "))

@@ -134,10 +134,11 @@ class ShuffleBudgetSpec extends AnyFunSuite {
 
   test("fit stats pass shuffles O(distinct values), far below corpus bytes") {
     // the fit reads its stats in one narrow pass (FitStats): each task
-    // returns sorted (value, count, Σtarget) runs, merged by treeReduce.
-    // No melt and no groupBy exchange: up to 4 partitions, treeReduce
-    // merges on the driver and nothing is shuffled; above that only the
-    // per-partition runs (O(distinct values) each) are shuffled
+    // returns sorted (value, count, Σtarget) runs, which the driver
+    // merges.  No melt and no groupBy exchange: up to 32 partitions the
+    // driver collects every task's runs and nothing is shuffled; above
+    // that only the per-partition runs (O(distinct values) each) are
+    // shuffled, to one merge level
     val cols = Seq("quantity", "discount") // about 50 and 11 distinct values
     val distinct = {
       val d = TestSpark.lcgFrame(sf01).agg(countDistinct("quantity"), countDistinct("discount")).head()
@@ -152,12 +153,12 @@ class ShuffleBudgetSpec extends AnyFunSuite {
         ()
       } finally df.unpersist()
     }
-    for (p <- Seq(1, 4)) {
+    for (p <- Seq(1, 4, 8, 32)) {
       val cost = fitCost(p)
       assert(cost.jobs == 1, s"$p partitions: ${cost.jobs} jobs")
       assert(cost.shuffleBytes == 0L, s"$p partitions: fit shuffled ${cost.shuffleBytes} bytes")
     }
-    // at 64 partitions treeReduce adds one level of sqrt(64) = 8
+    // at 64 partitions the gather adds one level of sqrt(64) = 8
     // merging tasks; each returns at most every distinct value (24 bytes:
     // value, count, Σtarget).  Every task, the 64 that shuffle partial
     // runs included, also returns its metrics (about 2-4 kB).  A per-row
@@ -169,18 +170,18 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       s"64 partitions: collected ${cost.resultBytes} bytes, bound $bound " +
         s"($distinct distinct values, ${cost.tasks} tasks)")
     assert(cost.tasks <= 64 + 8, s"64 partitions: ${cost.tasks} tasks")
-    // the treeReduce level shuffles the 64 partial runs, never the rows
+    // the merge level shuffles the 64 partial runs, never the rows
     val corpusBytes = 600000L * 8 * 2
-    assert(cost.shuffleBytes > 0L, "64 partitions: expected a (small) treeReduce shuffle")
+    assert(cost.shuffleBytes > 0L, "64 partitions: expected a (small) merge-level shuffle")
     assert(cost.shuffleBytes < corpusBytes / 20,
       s"64 partitions: stats pass shuffled ${cost.shuffleBytes} bytes — corpus-scale, not distinct-scale")
     info(s"64 partitions: ${cost.resultBytes} task-result bytes from ${cost.tasks} tasks, bound $bound, " +
-      s"${cost.shuffleBytes} treeReduce shuffle bytes ($distinct distinct values)")
+      s"${cost.shuffleBytes} merge-level shuffle bytes ($distinct distinct values)")
   }
 
   test("fitByGroup: one narrow stats job, collect bounded by segments × distinct values") {
     // every segment's runs come from the fit's one pass: each task keeps
-    // per-segment runs and treeReduce merges them segment by segment,
+    // per-segment runs and the driver merges them segment by segment,
     // with no melt and no groupBy exchange
     val cols = Seq("quantity", "discount") // about 50 and 11 distinct values
     val base = spark.read.parquet(s"$sf01/lineitem.parquet")
