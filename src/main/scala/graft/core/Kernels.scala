@@ -438,8 +438,10 @@ object Kernels {
     */
   def exactMedian(values: Array[Double], counts: Array[Long]): Double = {
     var n = 0L
-    for (c <- counts) n += c
-    var i = 0; var seen = 0L
+    var i = 0
+    while (i < counts.length) { n += counts(i); i += 1 }
+    i = 0
+    var seen = 0L
     def valueAt(pos: Long): Double = { // 0-based order statistic, pos ascending
       while (seen <= pos) { seen += counts(i); i += 1 }
       values(i - 1)

@@ -2,7 +2,9 @@ package graft.spark
 
 import graft.core._
 import graft.functions.{WoeChain, WoeLookup}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,20 +35,31 @@ final case class WoeFitOptions(
   * (graft.core.Kernels) run driver-side over the collected
   * per-variable stats.
   *
-  * The pass reads the feature columns and the target cast to double
-  * over `queryExecution.toRdd`.  Each task buffers a fixed block of rows
-  * in primitive arrays, each value with its row's target bit.  One LSD
-  * radix sort per variable and block, over order-preserving 64-bit keys
-  * and carrying the target bit, orders the block; a run-length pass
-  * turns it into sorted (value, count, Σtarget) runs plus a missing
-  * bucket.  Each block folds into the task's runs with a sorted merge
-  * that adds the counts of equal values.  The tasks' runs ship as
-  * varints and reach the driver in one stage (above 32 partitions, one
-  * shuffle level first merges them to about √partitions results), where
-  * each variable's runs are merged in parallel, pairwise, the same way.
-  * There is no melt and no shuffle of the data, and the driver decodes
-  * no rows: the kernels read each variable's merged run arrays.  A task returns O(partition distinct) values
-  * per variable, so the collect is bounded by distinct values, not rows.
+  * The pass reads one of two inputs.  When the frame's executed plan is
+  * a bare columnar Parquet scan (at most a projection of its double,
+  * float, long, int, short or byte columns), each task reads the scan's
+  * column batches: a dictionary-encoded vector is counted per id (rows
+  * and target sum), and only the ids a batch used are decoded; a plain
+  * vector's cells are read as they are.  Any other frame (computed
+  * columns, filters, cached frames, other sources, a per-segment fit,
+  * or `spark.sql.codegen.wholeStage=false`) is read as rows of the
+  * feature columns and the target cast to double over
+  * `queryExecution.toRdd`.  Both inputs fill the same fixed blocks of
+  * primitive arrays, each entry a value with its rows and target sum.
+  * One LSD radix sort per variable and block, over order-preserving
+  * 64-bit keys and carrying each entry's weight, orders the block; a
+  * run-length pass turns it into sorted (value, count, Σtarget) runs
+  * plus a missing bucket.  Each block folds into the task's runs with a
+  * sorted merge that adds the counts of equal values.  The tasks' runs
+  * ship as varints and reach the driver in one stage (above 32
+  * partitions, one shuffle level first merges them to about
+  * √partitions results), where each variable's runs are merged in
+  * parallel, pairwise, the same way.  There is no melt and no shuffle of
+  * the data, and the driver decodes no rows: the kernels read each
+  * variable's merged run arrays, and each variable's median comes from
+  * the same runs in its kernel task.  A task returns O(partition
+  * distinct) values per variable, so the collect is bounded by distinct
+  * values, not rows.
   *
   * This replaces the reference's per-column process fan-out that
   * pickles the full column to each worker (binning.py:82,89-99) and its
@@ -280,9 +293,14 @@ object WoeBinning {
     val vs = stats.varStats(inputCols)
     val cfg = WoeConfig(opts.nThreshold.getOrElse(math.ceil(stats.rows.toDouble / 20.0)),
       opts.nOccurrences, opts.pThreshold, opts.sortOverload, opts.mergeThreshold)
-    val fitted = inputCols.par.map(c => c -> fitOne(c, targetCol, vs, cfg, opts.sepValue))
-    new WoeBinningModel(fitted.seq.toVector,
-      if (opts.maxDistinct.isDefined) Map.empty else stats.medians(inputCols), fitPlan)
+    val exact = opts.maxDistinct.isEmpty
+    // each variable's median in its own task, next to its kernels
+    val fitted = inputCols.indices.par.map { j =>
+      val c = inputCols(j)
+      (c, fitOne(c, targetCol, vs, cfg, opts.sepValue), if (exact) stats.median(j) else Double.NaN)
+    }.seq.toVector
+    new WoeBinningModel(fitted.map(f => f._1 -> f._2),
+      if (exact) fitted.map(f => f._1 -> f._3).toMap else Map.empty, fitPlan)
   }
 
   /** Sentinel fit (`woe_binning_sep`, binning.py:32-75) WITHOUT extra
@@ -599,9 +617,9 @@ object WoeBinningModel {
     * ONE job with no shuffle reads the selected columns cast to double
     * and sends each non-missing value to its leaf by [[WoeChain.leaf]],
     * the comparisons of the chain itself.  Each task returns its
-    * per-leaf (count, min, max), merged on the driver as tasks end: the
-    * collect is O(partitions × variables × bins), whatever the number
-    * of distinct values.  Every leaf's preimage is an interval (an
+    * per-leaf (count, min, max), merged on the driver: the collect is
+    * O(partitions × variables × bins), whatever the number of distinct
+    * values.  Every leaf's preimage is an interval (an
     * intersection of half-lines), so the occupied leaves ordered by
     * their min split the sorted values into consecutive runs, and the
     * driver can place ranks n/2−1 and n/2 (n non-missing values):
@@ -625,7 +643,9 @@ object WoeBinningModel {
     val width = offsets.last
     val rows = df.select(selected.map { case (v, _) => col(v).cast(DoubleType) }: _*)
       .queryExecution.toRdd
-    val ext = rows.mapPartitions { it =>
+    // submitted with runJob and a task function declared here: cleaning
+    // `RDD.fold`'s closures would parse `RDD`'s class file on every call
+    val ext = rows.sparkContext.runJob(rows, (_: TaskContext, it: Iterator[InternalRow]) => {
       val e = new LeafExtents(width)
       while (it.hasNext) {
         val row = it.next()
@@ -638,8 +658,8 @@ object WoeBinningModel {
           j += 1
         }
       }
-      Iterator.single(e)
-    }.fold(new LeafExtents(width))(_ merge _)
+      e
+    }).foldLeft(new LeafExtents(width))(_ merge _)
     val picked = chains.indices.map(j => pickImputation(ext, offsets(j), offsets(j + 1)))
     val overflow = selected.indices.filter(picked(_).isEmpty).map(selected(_)._1).distinct
     val exact =

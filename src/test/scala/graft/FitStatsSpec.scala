@@ -145,13 +145,22 @@ class FitStatsSpec extends AnyFunSuite {
       val n = vals.length
       val ones = vals.indices.filter(b.ones).map(vals).toArray
       val want = twoSortEncode(vals.clone(), n, ones, ones.length)
-      val got = StatsRuns.encode(vals, b.ones.map(o => (if (o) 1 else 0).toByte).toArray, n, scratch)
+      val wts = b.ones.map(o => StatsRuns.weight(1, if (o) 1 else 0)).toArray
+      val got = StatsRuns.encode(vals, wts, n, true, scratch)
       sameRuns(got, want).foreach(msg => fail(s"seed $seed ($b): $msg"))
-      val counted = StatsRuns.encode(vals, null, n, scratch)
+      val counted = StatsRuns.encode(vals, wts, n, false, scratch)
       assert(!counted.hasTarget, s"seed $seed ($b): a counts-only encode carries target sums")
       sameRuns(new StatsRuns(counted.values, counted.counts, want.tsums), want)
         .foreach(msg => fail(s"seed $seed ($b), counts only: $msg"))
       assert(vals.sameElements(b.vals), s"seed $seed ($b): encode reordered its input")
+      // the same rows as weighted entries, one per (value, target bit)
+      // pair in first-seen order, as a dictionary batch adds them
+      val entries = vals.indices.groupBy(i => (doubleToLongBits(vals(i)), b.ones(i))).toSeq
+        .sortBy(_._2.head).map { case (_, is) =>
+          (vals(is.head), StatsRuns.weight(is.length, if (b.ones(is.head)) is.length else 0)) }
+      val weighted = StatsRuns.encode(entries.map(_._1).toArray, entries.map(_._2).toArray,
+        entries.length, true, scratch)
+      sameRuns(weighted, want).foreach(msg => fail(s"seed $seed ($b), weighted entries: $msg"))
       cov = cov.add(b)
     }
     info(cov.toString)
@@ -389,6 +398,133 @@ class FitStatsSpec extends AnyFunSuite {
     assert(message(Seq(0.0, 1.0, null, 1.0)) ==
       "woe_binning: target contains nulls (variable 'x', value 2.0)")
   }
+
+  /** `kv` set in the Spark conf for the duration of `f`. */
+  private def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Every value, count, sum, missing bucket, row count and target text
+    * of a gathered pass, in comparable form.
+    */
+  private def plainStats(m: Map[String, FitStats]) = m.map { case (g, s) =>
+    g -> (s.runs.toSeq.map(r => (r.values.map(doubleToLongBits).toSeq, r.counts.toSeq,
+        Option(r.tsums).map(_.toSeq))), s.missing.toSeq, s.missingTsum.toSeq, s.rows,
+      s.badTarget, s.nullTarget)
+  }
+
+  /** Writes `t`'s rows as three Parquet files of different layouts and
+    * returns their directories: plain pages only (no dictionary); pages
+    * of at most 8 rows under a 64-byte dictionary limit, so a chunk with
+    * more values than fit starts dictionary-encoded and falls back to
+    * plain part-way; and 512-byte row groups, each with its own
+    * dictionary.
+    */
+  private def writeParquet(t: ParquetTrial, dir: java.nio.file.Path): Seq[String] = {
+    val schema = StructType(t.cols.indices.map(i => StructField(s"c$i", t.cols(i)._1.sqlType)) :+
+      StructField("target", IntegerType))
+    val rows = t.target.indices.map(r => Row(t.cols.map(_._2(r)) :+ t.target(r).map(Int.box).orNull: _*))
+    val layouts = Seq(
+      Map("parquet.enable.dictionary" -> "false"),
+      Map("parquet.dictionary.page.size" -> "64", "parquet.page.row.count.limit" -> "8",
+        "parquet.page.size.row.check.min" -> "2", "parquet.page.size" -> "256"),
+      Map("parquet.block.size" -> "512", "parquet.page.size.row.check.min" -> "4",
+        "parquet.block.size.row.check.min" -> "4", "parquet.page.row.count.limit" -> "16"))
+    val n = rows.length
+    layouts.indices.map { l =>
+      val out = dir.resolve(s"layout$l").toString
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.slice(n * l / 3, n * (l + 1) / 3), 1),
+        schema).write.options(layouts(l)).parquet(out)
+      out
+    }
+  }
+
+  /** Per Parquet file under `dirs`: its row groups, and for each column
+    * chunk whether it has dictionary-encoded and plain data pages.
+    */
+  private def layoutOf(dirs: Seq[String]): Seq[(Int, Seq[(Boolean, Boolean)])] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    for {
+      d <- dirs
+      f <- new java.io.File(d).listFiles().toSeq if f.getName.endsWith(".parquet")
+    } yield {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toURI), conf))
+      try {
+        val blocks = r.getFooter.getBlocks.asScala.toSeq
+        blocks.length -> blocks.flatMap(_.getColumns.asScala).map { c =>
+          val es = c.getEncodingStats
+          (es != null && es.hasDictionaryEncodedPages, es != null && es.hasNonDictionaryEncodedPages)
+        }
+      } finally r.close()
+    }
+  }
+
+  test("columnar pass == row pass, bit for bit (generated Parquet files)") {
+    var cov = ParquetCoverage()
+    val root = java.nio.file.Files.createTempDirectory("graft-fitstats-pq")
+    try for (seed <- 1L to 36L) {
+      val t = genParquetTrial.pureApply(Gen.Parameters.default, Seed(seed))
+      val dirs = writeParquet(t, root.resolve(s"seed$seed"))
+      val cols = t.cols.indices.map(i => s"c$i")
+      val conf = Seq("spark.sql.parquet.columnarReaderBatchSize" -> t.batchSize.toString,
+        "spark.sql.files.maxPartitionBytes" -> t.maxPartitionBytes.toString)
+      def passes(pass: String) = Seq(Some("target"), None).map { target =>
+        val parts = FitStats.partials(spark.read.parquet(dirs: _*), target, cols, None)
+        assert(parts.name == pass, s"seed $seed ($t): ${parts.name}, not $pass")
+        FitStats.gather(parts)
+      }
+      val got = withConf(conf: _*)(passes(FitStats.ColumnarPass))
+      val want = withConf(conf :+ ("spark.sql.parquet.enableVectorizedReader" -> "false"): _*)(
+        passes(FitStats.RowPass))
+      for ((g, w, what) <- Seq((got(0), want(0), "with a target"), (got(1), want(1), "counts only")))
+        assert(plainStats(g) == plainStats(w), s"seed $seed ($t), $what")
+      if (t.target.nonEmpty && t.target.forall(x => x.contains(0) || x.contains(1)))
+        sameStats(got(0)("").varStats(cols), want(0)("").varStats(cols))
+          .foreach(msg => fail(s"seed $seed ($t): $msg"))
+      cov = cov.add(t, layoutOf(dirs))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    info(cov.toString)
+    assert(cov.types == Set(PqDouble, PqFloat, PqInt, PqLong), cov)
+    assert(cov.signedZeros > 0 && cov.nan > 0 && cov.nulls > 0 && cov.infinite > 0, cov)
+    assert(cov.badTarget > 0 && cov.nullTarget > 0 && cov.cleanTarget > 0, cov)
+    assert(cov.plainChunks > 0 && cov.mixedChunks > 0 && cov.multiGroupDictFiles > 0, cov)
+    assert(cov.batchSizes == Set(7, 64, 4096), cov)
+  }
+
+  test("a filter, a computed column, a cached frame, ORC and wholeStage=false take the row pass") {
+    val root = java.nio.file.Files.createTempDirectory("graft-fitstats-route")
+    try {
+      val frame = spark.range(0, 3000, 1, 3).select(
+        when(col("id") % 7 === 0, lit(null)).otherwise(col("id") % 50 * 0.5).as("x"),
+        (col("id") % 13).cast("int").as("y"),
+        (col("id") % 9).cast("decimal(10,2)").as("d"),
+        ((col("id") * 7919) % 11 < 4).cast("int").as("target"))
+      frame.write.parquet(s"$root/pq")
+      frame.write.orc(s"$root/orc")
+      val pq = spark.read.parquet(s"$root/pq")
+      def run(df: DataFrame, cols: Seq[String] = Seq("x", "y"), group: Option[String] = None) = {
+        val parts = FitStats.partials(df, Some("target"), cols, group)
+        (parts.name, plainStats(FitStats.gather(parts)))
+      }
+      val (bare, stats) = run(pq)
+      assert(bare == FitStats.ColumnarPass)
+      assert(run(pq.select("target", "y", "x"))._1 == FitStats.ColumnarPass, "a reordering projection")
+      val cached = pq.cache()
+      try assert(run(cached) == (FitStats.RowPass, stats), "cached") finally cached.unpersist()
+      assert(run(spark.read.orc(s"$root/orc")) == (FitStats.RowPass, stats), "ORC")
+      assert(withConf("spark.sql.codegen.wholeStage" -> "false")(run(pq)) == (FitStats.RowPass, stats),
+        "wholeStage=false")
+      assert(run(pq.filter(col("y") =!= 3))._1 == FitStats.RowPass, "a filter")
+      assert(run(pq.withColumn("x", col("x") * 2))._1 == FitStats.RowPass, "a computed column")
+      assert(run(pq, Seq("x", "d"))._1 == FitStats.RowPass, "a decimal column")
+      assert(run(pq, Seq("x"), Some("y"))._1 == FitStats.RowPass, "bySegment")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
 }
 
 object FitStatsSpec {
@@ -616,4 +752,120 @@ object FitStatsSpec {
     case d: Double => doubleToLongBits(d)
     case x => x
   }.toSeq
+
+  /** A Parquet column type of the columnar pass: the cell stored for a
+    * drawn value, as its Spark type holds it.
+    */
+  sealed trait PqType {
+    def sqlType: DataType
+    def cell(x: Double): Any
+  }
+  case object PqDouble extends PqType {
+    val sqlType = DoubleType
+    def cell(x: Double): Any = x
+  }
+  case object PqFloat extends PqType {
+    val sqlType = FloatType
+    def cell(x: Double): Any = x.toFloat
+  }
+  case object PqInt extends PqType {
+    val sqlType = IntegerType
+    def cell(x: Double): Any = x.toInt
+  }
+  case object PqLong extends PqType {
+    val sqlType = LongType
+    def cell(x: Double): Any = x.toLong
+  }
+
+  final case class ParquetTrial(
+      cols: Seq[(PqType, Vector[Any])],
+      target: Vector[Option[Int]],
+      batchSize: Int,
+      maxPartitionBytes: Long) {
+    override def toString: String =
+      s"${target.length} rows, types ${cols.map(_._1).mkString(",")}, batches of $batchSize, " +
+        s"maxPartitionBytes $maxPartitionBytes"
+  }
+
+  /** Up to 30 values a column, so a 64-byte dictionary overflows, with
+    * −0.0 next to 0.0, ±inf, the type's extremes, NaN and null.
+    */
+  private def genPqColumn(rows: Int, ty: PqType): Gen[Vector[Any]] = {
+    val values: Gen[Double] = ty match {
+      case PqInt => Gen.oneOf(Gen.choose(-40, 40).map(_.toDouble),
+        Gen.oneOf(Int.MaxValue.toDouble, Int.MinValue.toDouble))
+      case PqLong => Gen.oneOf(Gen.choose(-40, 40).map(_.toDouble),
+        Gen.oneOf(Long.MaxValue.toDouble, Long.MinValue.toDouble))
+      case PqFloat | PqDouble => Gen.frequency(4 -> Gen.oneOf(Special ++ Huge),
+        3 -> Gen.choose(-40, 40).map(_.toDouble), 3 -> Gen.choose(-5.0, 5.0))
+    }
+    for {
+      poolSize <- Gen.oneOf(1, 3, 8, 30)
+      pool <- Gen.listOfN(poolSize, values)
+      missingRate <- Gen.oneOf(0.0, 0.0, 0.1, 0.5, 1.0)
+      cells <- Gen.listOfN(rows, for {
+        u <- Gen.choose(0.0, 1.0)
+        nan <- Gen.oneOf(true, false)
+        x <- Gen.oneOf(pool)
+      } yield
+        if (u >= missingRate) ty.cell(x)
+        else if (nan && (ty == PqDouble || ty == PqFloat)) ty.cell(Double.NaN)
+        else null)
+    } yield cells.toVector
+  }
+
+  val genParquetTrial: Gen[ParquetTrial] = for {
+    nCols <- Gen.choose(1, 4)
+    types <- Gen.listOfN(nCols, Gen.oneOf(PqDouble, PqFloat, PqInt, PqLong))
+    rows <- Gen.frequency(1 -> Gen.choose(0, 5), 3 -> Gen.choose(20, 300), 2 -> Gen.choose(600, 1500))
+    cells <- Gen.sequence[List[Vector[Any]], Vector[Any]](types.map(genPqColumn(rows, _)))
+    bad <- Gen.oneOf(0.0, 0.0, 0.005, 0.05)
+    nulls <- Gen.oneOf(0.0, 0.0, 0.005, 0.05)
+    target <- Gen.listOfN(rows, Gen.choose(0.0, 1.0).flatMap(u =>
+      if (u < bad) Gen.oneOf(2, -1).map(Some(_))
+      else if (u < bad + nulls) Gen.const(None)
+      else Gen.oneOf(0, 1).map(Some(_))))
+    batchSize <- Gen.oneOf(7, 64, 4096)
+    maxPartitionBytes <- Gen.oneOf(1024L, 128L << 20)
+  } yield ParquetTrial(types.zip(cells), target.toVector, batchSize, maxPartitionBytes)
+
+  final case class ParquetCoverage(
+      types: Set[PqType] = Set.empty,
+      signedZeros: Int = 0,
+      nan: Int = 0,
+      nulls: Int = 0,
+      infinite: Int = 0,
+      badTarget: Int = 0,
+      nullTarget: Int = 0,
+      cleanTarget: Int = 0,
+      plainChunks: Int = 0,
+      mixedChunks: Int = 0,
+      multiGroupDictFiles: Int = 0,
+      batchSizes: Set[Int] = Set.empty) {
+    def add(t: ParquetTrial, files: Seq[(Int, Seq[(Boolean, Boolean)])]): ParquetCoverage = {
+      def asDouble(x: Any): Double = x match {
+        case f: Float => f.toDouble
+        case d: Double => d
+        case _ => 0.0
+      }
+      val floats = t.cols.filter(c => c._1 == PqDouble || c._1 == PqFloat).map(_._2.filter(_ != null))
+      def count(p: Vector[Any] => Boolean) = floats.count(p)
+      val chunks = files.flatMap(_._2)
+      copy(
+        types = types ++ t.cols.map(_._1),
+        signedZeros = signedZeros + count(c => c.exists(x => doubleToLongBits(asDouble(x)) ==
+          doubleToLongBits(-0.0)) && c.exists(x => doubleToLongBits(asDouble(x)) == 0L)),
+        nan = nan + count(_.exists(x => asDouble(x).isNaN)),
+        nulls = nulls + t.cols.count(_._2.contains(null)),
+        infinite = infinite + count(_.exists(x => asDouble(x).isInfinite)),
+        badTarget = badTarget + (if (t.target.exists(_.exists(x => x != 0 && x != 1))) 1 else 0),
+        nullTarget = nullTarget + (if (t.target.contains(None)) 1 else 0),
+        cleanTarget = cleanTarget + (if (t.target.nonEmpty &&
+          t.target.forall(x => x.contains(0) || x.contains(1))) 1 else 0),
+        plainChunks = plainChunks + chunks.count(c => !c._1 && c._2),
+        mixedChunks = mixedChunks + chunks.count(c => c._1 && c._2),
+        multiGroupDictFiles = multiGroupDictFiles + files.count(f => f._1 > 1 && f._2.exists(_._1)),
+        batchSizes = batchSizes + t.batchSize)
+    }
+  }
 }

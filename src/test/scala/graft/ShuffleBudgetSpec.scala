@@ -179,6 +179,33 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       s"${cost.shuffleBytes} merge-level shuffle bytes ($distinct distinct values)")
   }
 
+  test("fit over a bare Parquet scan reads its column vectors: one job, no shuffle") {
+    // one file a partition: each file's open cost fills a split
+    val root = java.nio.file.Files.createTempDirectory("graft-budget-pq")
+    val prevOpenCost = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", (128L << 20).toString)
+    try for (p <- Seq(1, 4, 8, 32)) {
+      val dir = s"$root/p$p"
+      TestSpark.lcgFrame(sf01).select("quantity", "discount", "target").repartition(p)
+        .write.parquet(dir)
+      val df = spark.read.parquet(dir)
+      val parts = graft.spark.FitStats.partials(df, Some("target"), Seq("quantity", "discount"), None)
+      assert(parts.name == graft.spark.FitStats.ColumnarPass && parts.getNumPartitions == p,
+        s"$p partitions: ${parts.name} over ${parts.getNumPartitions} partitions")
+      val cost = jobCost {
+        graft.spark.WoeBinning.fit(df, "target", Seq("quantity", "discount"),
+          graft.spark.WoeFitOptions(nThreshold = Some(300)))
+        ()
+      }
+      assert(cost.jobs == 1, s"$p partitions: ${cost.jobs} jobs")
+      assert(cost.tasks == p, s"$p partitions: ${cost.tasks} tasks")
+      assert(cost.shuffleBytes == 0L, s"$p partitions: fit shuffled ${cost.shuffleBytes} bytes")
+    } finally {
+      spark.conf.set("spark.sql.files.openCostInBytes", prevOpenCost)
+      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    }
+  }
+
   test("fitByGroup: one narrow stats job, collect bounded by segments × distinct values") {
     // every segment's runs come from the fit's one pass: each task keeps
     // per-segment runs and the driver merges them segment by segment,
